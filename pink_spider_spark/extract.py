@@ -24,7 +24,11 @@ from . import providers, readability
 from .htmldom import dom, parse_html, serialize
 from .htmldom.dom import ELEMENT, Node
 from .providers import Catalog, EMPTY_CATALOG, EnclosureRef
-from .readability import Candidate, path_join, path_parent
+from .readability import Candidate, path_join
+
+# the only tags extract_opengraph_metadata_from_tag,
+# extract_enclosures_from_tag and the link harvest act on
+_PROBE_TAGS = frozenset(["meta", "iframe", "a", "link"])
 
 
 @dataclass
@@ -104,7 +108,6 @@ class _Walker:
         self.url = url
         self.catalog = catalog
         self.candidates: dict[str, Candidate] = {}
-        self.nodes: dict[str, Node] = {}
         self.tracks: list[dict] = []
         self.playlists: list[dict] = []
         self.albums: list[dict] = []
@@ -130,51 +133,51 @@ class _Walker:
                 self._seen_album_keys.add(key)
                 self.albums.append(_ref_to_row(ref, doc_pos, child_pos))
 
-    def walk(self, path: str, node: Node) -> None:
-        tag_name = dom.get_tag_name(node) or ""
+    def _probe(self, tag_name: str, attrs: list) -> None:
+        """og props, enclosures and discovered links of one element."""
+        self.og_props.extend(
+            extract_opengraph_metadata_from_tag(tag_name, attrs))
+        refs = extract_enclosures_from_tag(tag_name, attrs, self.catalog)
+        if refs:
+            doc_pos = self._doc_pos
+            child_pos = 0
+            for ref in refs:
+                self._push(ref, doc_pos, child_pos)
+                child_pos += 1
+        # link harvest for the frontier (north-rule addition; the
+        # reference's rss_crawler follows feed entries, not page links)
+        if tag_name in ("a", "link"):
+            href = dom.attr("href", attrs)
+            if href:
+                try:
+                    self.links.append(urljoin(self.url, href))
+                except ValueError:
+                    pass
+
+    def walk(self, path: str, node: Node, parent=None, grand=None) -> None:
+        """``parent`` and ``grand`` are the ``(node, path)`` of the
+        node's parent and grandparent, None above the root."""
         if node.kind == ELEMENT:
-            self.og_props.extend(
-                extract_opengraph_metadata_from_tag(tag_name, node.attrs))
-            refs = extract_enclosures_from_tag(tag_name, node.attrs, self.catalog)
-            if refs:
-                doc_pos = self._doc_pos
-                child_pos = 0
-                for ref in refs:
-                    self._push(ref, doc_pos, child_pos)
-                    child_pos += 1
+            tag_name = node.tag
+            if tag_name in _PROBE_TAGS:
+                self._probe(tag_name, node.attrs)
             self._doc_pos += 1
-            # link harvest for the frontier (north-rule addition; the
-            # reference's rss_crawler follows feed entries, not page links)
-            if tag_name in ("a", "link"):
-                href = dom.attr("href", node.attrs)
-                if href:
-                    try:
-                        self.links.append(urljoin(self.url, href))
-                    except ValueError:
-                        pass
+            if readability.is_candidate(node):
+                score = readability.calc_content_score(node)
+                if parent is not None:
+                    c = self._candidate(*parent)
+                    c.score = readability.add_score(c.score, score)
+                if grand is not None:
+                    c = self._candidate(*grand)
+                    c.score = readability.add_score(c.score, score / 2)
 
-        self.nodes[path] = node
-
-        if readability.is_candidate(node):
-            score = readability.calc_content_score(node)
-            pid = path_parent(path)
-            if pid is not None:
-                c = self._find_or_create_candidate(pid)
-                if c is not None:
-                    c.score = readability._f32(c.score + score)
-            gpid = path_parent(pid) if pid is not None else None
-            if gpid is not None:
-                c = self._find_or_create_candidate(gpid)
-                if c is not None:
-                    c.score = readability._f32(c.score + readability._f32(score / readability._f32(2.0)))
-
+        here = (node, path)
         for i, child in enumerate(node.children):
-            self.walk(path_join(path, i), child)
+            # only elements probe, score or hold children
+            if child.kind == ELEMENT:
+                self.walk(path_join(path, i), child, here, parent)
 
-    def _find_or_create_candidate(self, path: str):
-        node = self.nodes.get(path)
-        if node is None:
-            return None
+    def _candidate(self, node: Node, path: str) -> Candidate:
         c = self.candidates.get(path)
         if c is None:
             c = self.candidates[path] = Candidate(
@@ -192,12 +195,12 @@ def extract(html, url: str, catalog: Catalog = EMPTY_CATALOG) -> ExtractProduct:
 
     top_id = "/"
     top_node = document
-    top_score = readability._f32(0.0)
+    top_score = 0.0
     for path in sorted(walker.candidates):
         c = walker.candidates[path]
         score = readability._f32(
             c.score * readability._f32(
-                readability._f32(1.0) - readability.get_link_density(c.node)))
+                1.0 - readability.get_link_density(c.node)))
         c.score = score
         if score <= top_score:
             continue

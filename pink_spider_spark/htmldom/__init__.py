@@ -15,16 +15,13 @@ from .dom import (  # noqa: F401
     Node,
     attr,
     extract_text,
-    find_node,
     get_attr,
     get_tag_name,
-    has_link,
     has_nodes,
     is_empty,
     remove_attr,
     set_attr,
     text_children_count,
-    text_len,
 )
 from .parser import parse_html  # noqa: F401
 from .serializer import serialize  # noqa: F401

@@ -107,16 +107,6 @@ def is_empty(node: Node) -> bool:
     return (get_tag_name(node) or "") in ("li", "dt", "dd", "p", "div", "canvas")
 
 
-def has_link(node: Node) -> bool:
-    """reference: src/dom.rs:90-100."""
-    if get_tag_name(node) == "a":
-        return True
-    for child in node.children:
-        if has_link(child):
-            return True
-    return False
-
-
 def extract_text(node: Node, parts: list, deep: bool) -> None:
     """Concatenation of TRIMMED text descendants, no separator
     (reference: src/dom.rs:102-117)."""
@@ -127,26 +117,12 @@ def extract_text(node: Node, parts: list, deep: bool) -> None:
             extract_text(child, parts, deep)
 
 
-def text_len(node: Node) -> int:
-    """Sum of trimmed char counts over all text descendants
-    (reference: src/dom.rs:119-134; Rust chars().count() == Python len)."""
-    n = 0
-    for child in node.children:
-        if child.kind == TEXT:
-            n += len(child.text.strip())
-        elif child.kind == ELEMENT:
-            n += text_len(child)
-    return n
-
-
 def text_len_reaches(node: Node, limit: int) -> bool:
-    """``text_len(node) >= limit`` with early exit: stops scanning the
-    subtree the moment the bound is proven.  Threshold tests like
-    readability's is_candidate (< 20 chars) call text_len on every
-    element INCLUDING whole-page containers, where summing the full
-    subtree to compare against a tiny constant is O(page) per node —
-    this makes those tests O(limit).  Boolean-identical to the full sum
-    by construction (trimmed lengths are non-negative)."""
+    """``text_len(node) >= limit``, where ``text_len`` sums trimmed char
+    counts over all text descendants (reference: src/dom.rs:119-134; Rust
+    chars().count() == Python len).  The scan stops once the bound is
+    proven, so a threshold test on a whole-page container is O(limit),
+    not O(page); trimmed lengths are non-negative, so it is exact."""
     return _text_len_upto(node, limit) >= limit
 
 
@@ -160,16 +136,6 @@ def _text_len_upto(node: Node, limit: int) -> int:
         if n >= limit:
             return n
     return n
-
-
-def find_node(node: Node, tag_name: str, out: list) -> None:
-    """All element DESCENDANTS with this tag, pre-order
-    (reference: src/dom.rs:136-150)."""
-    for child in node.children:
-        if child.kind == ELEMENT:
-            if child.tag == tag_name:
-                out.append(child)
-            find_node(child, tag_name, out)
 
 
 def has_nodes(node: Node, tag_names) -> bool:

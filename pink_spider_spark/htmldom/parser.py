@@ -238,6 +238,10 @@ class _TreeBuilder(HTMLParser):
         self._script_tail = ""
         self._cdata_reenter = False
 
+    def updatepos(self, i, j):
+        # the tokenizer's line/offset bookkeeping (getpos) is never read
+        return j
+
     # ================================================== tree helpers
     def current(self) -> Node:
         return self.stack[-1]

@@ -2,8 +2,17 @@
 
 Faithful re-expression of the reference's readability module
 (reference: src/readability.rs), operating on the stdlib DOM in
-``pink_spider_spark.htmldom``.  Scores use numpy float32 to mirror the
-reference's ``f32`` accumulation.
+``pink_spider_spark.htmldom``.
+
+Scores are Python numbers equal bit for bit to the reference's ``f32``
+ones.  Content and initial scores are integers and the walk adds halves
+of them, so every sum is a multiple of 1/2: exact in f32 below 2^23.
+``_f32`` rounds only where a result can leave that range or a real
+fraction appears: ``add_score``, huge content scores and link-length
+sums, the link-density division, the ``score * (1 - link_density)``
+product of top-candidate selection and the ``is_useless`` comparisons.
+Rounding the double result of an f32 + - * / once to f32 is exact
+(53 >= 2 * 24 + 2 significand bits).
 
 Path ids: the reference keys candidates by filesystem-style path strings
 ("/", "/0", "/0/3") in a BTreeMap; iteration order is lexicographic on the
@@ -13,6 +22,7 @@ selection — reproduced here by sorting dict keys.
 
 from __future__ import annotations
 
+import math
 import re
 from urllib.parse import urljoin
 
@@ -45,13 +55,23 @@ BLOCK_CHILD_TAGS = frozenset(
     ["a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"]
 )
 
-PUNCTUATIONS = re.compile(PUNCTUATIONS_REGEX)
+# the reference pattern's matches, led by one class so the regex engine
+# skips to candidate marks: "." and "," take their next char as before
+PUNCTUATIONS = re.compile(
+    r"[、。，．！？!?.,](?:(?<=\.)[^A-Za-z0-9]|(?<=,)[^0-9]|(?<![.,]))")
 LIKELY = re.compile(LIKELY_CANDIDATES)
 UNLIKELY = re.compile(UNLIKELY_CANDIDATES)
 POSITIVE = re.compile(POSITIVE_CANDIDATES)
 NEGATIVE = re.compile(NEGATIVE_CANDIDATES)
 
-_f32 = np.float32
+# integers up to 2^24 and multiples of 1/2 below 2^23 are exact in f32
+_F32_INT_MAX = 1 << 24
+_F32_HALF_MAX = 1 << 23
+
+
+def _f32(x) -> float:
+    """``x`` rounded to the nearest f32, as a Python float."""
+    return float(np.float32(x))
 
 
 class Candidate:
@@ -59,7 +79,7 @@ class Candidate:
 
     def __init__(self, node: Node, score):
         self.node = node
-        self.score = _f32(score)
+        self.score = score
 
 
 # ---------------------------------------------------------------- paths
@@ -67,14 +87,15 @@ def path_join(path: str, index: int) -> str:
     return f"/{index}" if path == "/" else f"{path}/{index}"
 
 
-def path_parent(path: str) -> str | None:
-    if path == "/":
-        return None
-    head, _, _ = path.rpartition("/")
-    return head if head else "/"
-
-
 # ------------------------------------------------------------- scoring
+def add_score(total, delta):
+    """The reference's f32 ``total + delta`` for multiples of 1/2."""
+    s = total + delta
+    if -_F32_HALF_MAX < s < _F32_HALF_MAX:
+        return s
+    return _f32(s)
+
+
 def fix_img_path(node: Node, base_url: str) -> bool:
     """reference: src/readability.rs:56-69.  Quirk preserved: only
     absolute https:// srcs are re-joined (a no-op for normalized URLs);
@@ -90,70 +111,96 @@ def fix_img_path(node: Node, base_url: str) -> bool:
     return True
 
 
-def get_link_density(node: Node) -> np.float32:
-    """reference: src/readability.rs:71-83 (f32 division)."""
-    text_length = _f32(dom.text_len(node))
-    if text_length == _f32(0.0):
-        return _f32(0.0)
-    links: list[Node] = []
-    dom.find_node(node, "a", links)
-    link_length = _f32(0.0)
-    for link in links:
-        link_length = _f32(link_length + _f32(dom.text_len(link)))
-    return _f32(link_length / text_length)
+def _subtree_stats(node: Node):
+    """``(text_len, link_lens, counts)`` in one pass: the subtree's
+    trimmed text length (reference: src/dom.rs:119-134), the text length
+    of each ``<a>`` descendant in pre-order, and the number of
+    p/img/li/input/embed descendants (src/dom.rs:136-150)."""
+    links: list[int] = []
+    counts = dict.fromkeys(("p", "img", "li", "input", "embed"), 0)
+    return _visit(node, links, counts), links, counts
+
+
+def _visit(node: Node, links: list, counts: dict) -> int:
+    total = 0
+    for child in node.children:
+        if child.kind == TEXT:
+            total += len(child.text.strip())
+        elif child.kind == ELEMENT:
+            tag = child.tag
+            if tag in counts:
+                counts[tag] += 1
+            if tag != "a":
+                total += _visit(child, links, counts)
+                continue
+            i = len(links)
+            links.append(0)
+            links[i] = size = _visit(child, links, counts)
+            total += size
+    return total
+
+
+def get_link_density(node: Node, stats=None) -> float:
+    """reference: src/readability.rs:71-83 (f32 division).  ``stats`` is
+    ``_subtree_stats(node)`` when the caller already has it."""
+    text_length, links, _ = stats or _subtree_stats(node)
+    if text_length == 0:
+        return 0.0
+    link_length = sum(links)
+    if link_length > _F32_INT_MAX:
+        # the reference's per-link f32 sum; nested <a> text counts once
+        # per enclosing <a>, so this sum can exceed text_length
+        link_length = 0.0
+        for n in links:
+            link_length = _f32(link_length + _f32(n))
+    return _f32(link_length / _f32(text_length))
 
 
 def is_candidate(node: Node) -> bool:
     """reference: src/readability.rs:85-103."""
-    # early-exit bound: identical to text_len(node) < 20, without
-    # summing whole-page subtrees to compare against 20
+    tag = dom.get_tag_name(node) or ""
+    if tag not in ("p", "div", "article", "center", "section"):
+        return False
     if not dom.text_len_reaches(node, 20):
         return False
-    tag = dom.get_tag_name(node) or ""
     if tag == "p":
         return True
-    if tag in ("div", "article", "center", "section"):
-        if not dom.has_nodes(node, BLOCK_CHILD_TAGS):
-            return True
-        return dom.text_children_count(node) > 5
-    return False
+    if not dom.has_nodes(node, BLOCK_CHILD_TAGS):
+        return True
+    return dom.text_children_count(node) > 5
 
 
-def init_content_score(node: Node) -> np.float32:
+def init_content_score(node: Node) -> int:
     """reference: src/readability.rs:105-116."""
-    tag = dom.get_tag_name(node) or ""
-    score = {
-        "article": 10.0,
-        "div": 5.0,
-        "blockquote": 3.0,
-        "form": -3.0,
-        "th": 5.0,
-    }.get(tag, 0.0)
-    return _f32(_f32(score) + get_class_weight(node))
+    score = {"article": 10, "div": 5, "blockquote": 3, "form": -3, "th": 5}
+    return score.get(dom.get_tag_name(node) or "", 0) + get_class_weight(node)
 
 
-def calc_content_score(node: Node) -> np.float32:
+def calc_content_score(node: Node):
     """reference: src/readability.rs:118-126."""
-    score = _f32(1.0)
     parts: list = []
     dom.extract_text(node, parts, True)
     text = "".join(parts)
-    score = _f32(score + _f32(len(PUNCTUATIONS.findall(text))))
-    score = _f32(score + min(_f32(np.floor(_f32(len(text)) / _f32(100.0))), _f32(3.0)))
+    punct = len(PUNCTUATIONS.findall(text))
+    # the f32 floor(len / 100) is len // 100 below 300 and >= 3 above
+    bonus = min(len(text) // 100, 3)
+    score = 1 + punct + bonus
+    if score > _F32_INT_MAX:
+        score = _f32(_f32(1 + _f32(punct)) + bonus)
     return score
 
 
-def get_class_weight(node: Node) -> np.float32:
+def get_class_weight(node: Node) -> int:
     """reference: src/readability.rs:128-146."""
-    weight = _f32(0.0)
+    weight = 0
     if node.kind == ELEMENT:
         for name in ("id", "class"):
             val = dom.attr(name, node.attrs)
             if val is not None:
                 if POSITIVE.search(val):
-                    weight = _f32(weight + _f32(25.0))
+                    weight += 25
                 if NEGATIVE.search(val):
-                    weight = _f32(weight - _f32(25.0))
+                    weight -= 25
     return weight
 
 
@@ -203,7 +250,7 @@ def preprocess(node: Node) -> bool:
 
 # --------------------------------------------------------------- clean
 def clean(path: str, node: Node, base_url: str, candidates: dict) -> bool:
-    """Remove chrome/uselss subtrees under the chosen top candidate;
+    """Remove chrome/useless subtrees under the chosen top candidate;
     returns True when the caller must remove this node
     (reference: src/readability.rs:216-261)."""
     useless = False
@@ -229,8 +276,7 @@ def clean(path: str, node: Node, base_url: str, candidates: dict) -> bool:
 
     useless_nodes: list[Node] = []
     for i, child in enumerate(node.children):
-        pid = path_join(path, i)
-        if clean(pid, child, base_url, candidates):
+        if clean(path_join(path, i), child, base_url, candidates):
             useless_nodes.append(child)
     for n in useless_nodes:
         n.remove_from_parent()
@@ -244,39 +290,25 @@ def is_useless(path: str, node: Node, candidates: dict) -> bool:
     tag_name = dom.get_tag_name(node) or ""
     weight = get_class_weight(node)
     cand = candidates.get(path)
-    score = cand.score if cand is not None else _f32(0.0)
-    if _f32(weight + score) < _f32(0.0):
+    score = cand.score if cand is not None else 0
+    if _f32(weight + score) < 0:
         return True
 
     text_nodes_len = dom.text_children_count(node)
-    p_nodes: list[Node] = []
-    img_nodes: list[Node] = []
-    li_nodes: list[Node] = []
-    input_nodes: list[Node] = []
-    embed_nodes: list[Node] = []
-    dom.find_node(node, "p", p_nodes)
-    dom.find_node(node, "img", img_nodes)
-    dom.find_node(node, "li", li_nodes)
-    dom.find_node(node, "input", input_nodes)
-    dom.find_node(node, "embed", embed_nodes)
-    p_count = len(p_nodes)
-    img_count = len(img_nodes)
-    li_count = len(li_nodes) - 100
-    input_count = len(input_nodes)
-    embed_count = len(embed_nodes)
-    link_density = get_link_density(node)
-    content_length = dom.text_len(node)
-    para_count = text_nodes_len + p_count
+    content_length, _, counts = stats = _subtree_stats(node)
+    img_count = counts["img"]
+    embed_count = counts["embed"]
+    para_count = text_nodes_len + counts["p"]
 
     if img_count > para_count + text_nodes_len:
         return True
-    if li_count > para_count and tag_name != "ul" and tag_name != "ol":
+    if counts["li"] - 100 > para_count and tag_name != "ul" and tag_name != "ol":
         return True
-    if _f32(input_count) > _f32(np.floor(_f32(para_count) / _f32(3.0))):
+    if _f32(counts["input"]) > math.floor(_f32(_f32(para_count) / 3.0)):
         return True
     if content_length < 25 and (img_count == 0 or img_count > 2):
         return True
-    if weight < _f32(25.0) and link_density > _f32(0.2):
+    if weight < 25 and get_link_density(node, stats) > _f32(0.2):
         return True
     if (embed_count == 1 and content_length < 35) or embed_count > 1:
         return True

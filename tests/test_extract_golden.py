@@ -58,6 +58,28 @@ def test_golden_empty_div_removed_and_img_kept():
         '</div>')
 
 
+def test_golden_nested_link_text_counts_per_enclosing_link():
+    # the parser keeps an <a> nested in a table cell inside the outer
+    # <a>; link density sums each <a>'s text, so "yyyyy" counts twice.
+    # Inner div: text 1 + 5 + 24 = 30 chars, links 6 + 5 = 11, density
+    # 11/30 > 0.2 with weight 0: is_useless drops it (counted once, the
+    # density would be 6/30 = 0.2, not above the bound, and it would stay)
+    html = ('<html><body><div id="main">'
+            '<p>Alpha beta gamma delta epsilon zeta eta theta iota kappa.</p>'
+            '<p>Lambda mu nu xi omicron pi rho sigma tau upsilon phi chi.</p>'
+            '<div><a href="/x">x<table><tr><td><a href="/y">yyyyy</a>'
+            '</td></tr></table></a>plain text, not any link</div>'
+            '</div></body></html>')
+    p = extract(html, "https://example.com/d")
+    assert p.text == ("Alpha beta gamma delta epsilon zeta eta theta iota kappa."
+                      "Lambda mu nu xi omicron pi rho sigma tau upsilon phi chi.")
+    assert p.content == (
+        "<div>"
+        "<p>Alpha beta gamma delta epsilon zeta eta theta iota kappa.</p>"
+        "<p>Lambda mu nu xi omicron pi rho sigma tau upsilon phi chi.</p>"
+        "</div>")
+
+
 def test_canonicalize_url():
     assert _canon_one("HTTPS://Host0.Example.COM:443/p/1#frag") == \
         "https://host0.example.com/p/1"
