@@ -1,9 +1,9 @@
 """Broadcast bloom filter for the URL-seen set.
 
-North-rule component: "broadcast bloom/cuckoo URL-seen filter keyed on
-canonicalized+hashed URLs".  The reference has no equivalent — its seen
-check is a per-row SQL lookup on the unique ``entries.url`` index
-(reference: src/model/entry.rs:206-217); at 10^10 URLs that becomes this:
+North-rule component: the URL-seen filter keyed on canonicalized+hashed
+URLs.  The reference has no equivalent — its seen check is a per-row SQL
+lookup on the unique ``entries.url`` index (reference:
+src/model/entry.rs:206-217); at 10^10 URLs that becomes this:
 
 - keys are xxhash64(canonical url) computed JVM-side (functions/udfs.py)
 - k probe positions derive from the single 64-bit key by splitmix64
@@ -215,12 +215,11 @@ def update_bloom_shards(shards: DataFrame, new_keys: DataFrame,
         if left.empty:
             return right[[f.name for f in SHARD_SCHEMA.fields]]
         if right.empty:
-            # sizing must match the table; derive from any sibling is not
-            # possible inside the task, so the caller guarantees the build
-            # covered every shard id OR accepts proto sizing via closure
+            # the task sees only its own shard, so it cannot size a fresh
+            # bitmap to match the table; the build must cover every id
             raise ValueError(
-                "update_bloom_shards: shard missing from table; build with "
-                "cover_all_shards=True or rebuild")
+                "update_bloom_shards: shard missing from table; wrap the "
+                "build in cover_all_shards(...) or rebuild")
         m_bits = int(right["m_bits"].iloc[0])
         k = int(right["k"].iloc[0])
         bf = BloomFilter(m_bits, k,
@@ -263,8 +262,8 @@ def cover_all_shards(shards: DataFrame, n_shards: int) -> DataFrame:
 
 def prune_with_bloom_shards(candidates: DataFrame, seen: DataFrame,
                             shards: DataFrame, hash_col: str = "url_hash",
-                            key_col: str = "url", n_shards: int = 64,
-                            cache_registry: list | None = None) -> DataFrame:
+                            key_col: str = "url",
+                            n_shards: int = 64) -> DataFrame:
     """Sharded twin of ``prune_with_bloom``: rows of ``candidates``
     definitely absent from ``seen``, with the bloom probe executed as a
     cogroup against the shard table — no broadcast, no driver bitmap.

@@ -68,16 +68,6 @@ class CrawlConfig:
     # if broadcast, ~3 MB per task if sharded).
     bloom_shard_min: int = 2_000_000
     bloom_n_shards: int = 64
-    # Which approximate membership structure backs the SHARDED seen
-    # filter: "bloom" (default — cheapest build, OR-mergeable) or
-    # "cuckoo" (crawl/cuckoo.py — 16-bit fingerprints in 4-slot
-    # buckets: ~100x lower fpp at comparable space AND supports
-    # deletion, the operation a bloom bit cannot do).  Both share the
-    # identical cogroup probe + exact confirm-join contract, so the
-    # crawl outcome is bit-identical either way (pinned by parity
-    # test).  The broadcast (small-crawl) regime always uses the bloom
-    # — cuckoo's advantages only matter at shard scale.
-    seen_filter: str = "bloom"
     # Every K waves, bin-pack the small per-wave append dirs of the
     # append-heavy tables (Iceberg rewrite_data_files analog) and re-pin
     # the checkpoint on the compacted snapshots.  0 = off.  At the 10^10
@@ -255,35 +245,19 @@ class CrawlDriver:
         outgrown -> full rebuild, sized 4x and covering every shard id so
         incremental updates never miss a shard row)."""
         n_shards = self.config.bloom_n_shards
-        if self.config.seen_filter == "cuckoo":
-            from .cuckoo import (build_cuckoo_shards,
-                                 cover_all_cuckoo_shards,
-                                 update_cuckoo_shards)
-
-            def full_build(df, capacity):
-                return cover_all_cuckoo_shards(
-                    build_cuckoo_shards(df, "url_hash", capacity,
-                                        n_shards=n_shards), n_shards)
-
-            incr_update = update_cuckoo_shards
-        else:
-            def full_build(df, capacity):
-                return cover_all_shards(
-                    build_bloom_shards(df, "url_hash", capacity,
-                                       n_shards=n_shards,
-                                       fpp=self.config.bloom_fpp), n_shards)
-
-            incr_update = update_bloom_shards
         held = self._bloom_shards
         if held is None or known_estimate > self._shards_capacity:
             capacity = max(4 * known_estimate, 100_000)
-            shards = full_build(frontier, capacity)
+            shards = cover_all_shards(
+                build_bloom_shards(frontier, "url_hash", capacity,
+                                   n_shards=n_shards,
+                                   fpp=self.config.bloom_fpp), n_shards)
             self._shards_capacity = capacity
         else:
             delta = (frontier
                      .filter(F.col("discovered_wave") > self._shards_covers)
                      .select("url_hash"))
-            shards = incr_update(held, delta, "url_hash", n_shards)
+            shards = update_bloom_shards(held, delta, "url_hash", n_shards)
         shards = shards.localCheckpoint(eager=False)
         self._bloom_shards = shards
         self._shards_covers = wave - 1
@@ -536,14 +510,9 @@ class CrawlDriver:
         # path; as a pool task it overlaps the seen/derived-table writes
         def build_frontier_next() -> DataFrame:
             if bloom_shards is not None:
-                if self.config.seen_filter == "cuckoo":
-                    from .cuckoo import prune_with_cuckoo_shards as prune_sh
-                else:
-                    prune_sh = prune_with_bloom_shards
-                new_urls = prune_sh(
+                new_urls = prune_with_bloom_shards(
                     with_url_hash(links), frontier.select("url"), bloom_shards,
-                    n_shards=self.config.bloom_n_shards,
-                    cache_registry=wave_caches)
+                    n_shards=self.config.bloom_n_shards)
             else:
                 new_urls = prune_with_bloom(
                     with_url_hash(links), frontier.select("url"),
@@ -602,7 +571,6 @@ class CrawlDriver:
                 scheduler.wave_order(
                     src,
                     distributed_threshold=self.config.wave_order_threshold,
-                    cache_registry=wave_caches,
                     # the batch count is already known (the dequeue's one
                     # materializing job) — skip wave_order's own count;
                     # a live recrawl changes the row set, so only then is

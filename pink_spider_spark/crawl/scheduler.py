@@ -70,7 +70,6 @@ def per_host_budget_batch(candidates: DataFrame) -> DataFrame:
 
 
 def wave_order(batch: DataFrame, distributed_threshold: int | None = 2048,
-               cache_registry: list | None = None,
                n_rows: int | None = None) -> DataFrame:
     """Deterministic in-wave sequence: rank by (priority DESC, url ASC).
 
@@ -99,9 +98,8 @@ def wave_order(batch: DataFrame, distributed_threshold: int | None = 2048,
     global sequence.  The frame is therefore pinned with
     ``localCheckpoint(eager=True)``: blocks are materialized once and the
     lineage is TRUNCATED, so a lost block fails the job fast instead of
-    silently recomputing a different assignment.  (``cache_registry`` is
-    kept for API compatibility; checkpoint blocks are GC-managed and need
-    no explicit unpersist.)
+    silently recomputing a different assignment.  Checkpoint blocks are
+    GC-managed and need no explicit unpersist.
 
     ``n_rows``: the caller's already-known row count (the crawl driver
     counts its batch once per wave anyway) — passing it skips this

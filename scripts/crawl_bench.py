@@ -82,11 +82,6 @@ def main():
                          "batch size: sharded bloom (bloom_shard_min=0), "
                          "distributed wave order (wave_order_threshold=0), and "
                          "the no-driver-url-list fetch join (url_collect_max=0)")
-    ap.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                    default="bloom",
-                    help="sharded seen-filter backend (cuckoo = crawl/"
-                         "cuckoo.py; only meaningful with --at-scale, which "
-                         "activates the sharded regime)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -136,8 +131,6 @@ def main():
     if args.at_scale:
         scale_kwargs = dict(bloom_shard_min=0, wave_order_threshold=0,
                             url_collect_max=0)
-    if args.seen_filter != "bloom":
-        scale_kwargs["seen_filter"] = args.seen_filter
     driver = CrawlDriver(spark, store, pages, robots, items,
                          CrawlConfig(max_depth=args.depth, max_waves=50,
                                      **scale_kwargs))
@@ -175,7 +168,6 @@ def main():
 
     out = {
         "mode": "at_scale" if args.at_scale else "default",
-        "seen_filter": args.seen_filter,
         "cpus": args.cpus,
         "pages": args.pages,
         "weight": args.weight,

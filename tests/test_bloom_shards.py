@@ -5,6 +5,8 @@ probe is a shard-local cogroup (crawl/bloom.py shard table section).
 """
 
 import numpy as np
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -83,3 +85,23 @@ def test_update_bloom_shards_incremental(spark):
                              np.frombuffer(srow.bitmap, dtype=np.uint64))
             assert bf.contains_many(
                 np.array([r.url_hash], dtype=np.int64)).all()
+
+
+def test_update_bloom_shards_missing_shard_raises(spark):
+    """A delta key whose shard has no row cannot be OR-ed in: the task
+    only sees its own shard, so the update fails instead of guessing a
+    bitmap size."""
+    seen = _keys_df(spark, ["https://only.example.com/one"])
+    shards = build_bloom_shards(seen, "url_hash", 10, n_shards=N_SHARDS)
+    assert shards.count() == 1
+    delta = _keys_df(spark, [f"https://x.example.net/{i}" for i in range(64)])
+    with pytest.raises(PythonException, match="shard missing"):
+        update_bloom_shards(shards, delta, "url_hash", N_SHARDS).collect()
+
+
+def test_cover_all_shards_empty_table_raises(spark):
+    """With no shard row there is no bitmap sizing to copy."""
+    empty = _keys_df(spark, ["https://a.example.com/"]).filter(F.lit(False))
+    shards = build_bloom_shards(empty, "url_hash", 10, n_shards=N_SHARDS)
+    with pytest.raises(ValueError, match="empty shard table"):
+        cover_all_shards(shards, N_SHARDS)
