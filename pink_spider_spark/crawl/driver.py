@@ -28,14 +28,11 @@ priority frontier, and the 500 ms sleep to per-host budgets.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING") == "1"
 
 from ..functions.udfs import canonicalize_url, extract_pages, host_col, with_url_hash
 from ..sources import schemas
@@ -104,6 +101,10 @@ class CrawlDriver:
         self.catalog_items = catalog_items
         self.config = config or CrawlConfig()
         self._catalog_df = None
+        self._drop_seen_filters()
+
+    def _drop_seen_filters(self) -> None:
+        """Forget the held seen filters so the next wave rebuilds them."""
         # broadcast-regime seen-bloom, maintained incrementally across
         # waves (see _bloom_for_wave): the bitmap object, the highest
         # discovered_wave it covers, and the key capacity it was sized for
@@ -141,15 +142,9 @@ class CrawlDriver:
         ``seed_urls``: a python list OR a DataFrame with a ``url`` column —
         the DataFrame form keeps 10^6+-row seed sets fully distributed
         (never materialized on the driver)."""
-        t0 = time.time()
         # a re-bootstrap replaces the frontier wholesale: drop any held
         # incremental bloom so wave 1 rebuilds over the new seed set
-        self._bloom = None
-        self._bloom_covers = -1
-        self._bloom_capacity = 0
-        self._bloom_shards = None
-        self._shards_covers = -1
-        self._shards_capacity = 0
+        self._drop_seen_filters()
         if isinstance(seed_urls, DataFrame):
             df = seed_urls.select("url")
             n_estimate = None
@@ -188,8 +183,6 @@ class CrawlDriver:
         self.store.commit_checkpoint(
             0, snapshots,
             counters={"seen": 0, "frontier_estimate": int(n_estimate)})
-        if _TIMING:
-            print(f"  [bootstrap] {time.time() - t0:.2f}s", flush=True)
 
     def _bloom_for_wave(self, frontier, wave: int, known_estimate: int):
         """Broadcast-regime seen-bloom with INCREMENTAL per-wave refresh.
@@ -272,7 +265,6 @@ class CrawlDriver:
     def run_wave(self) -> dict:
         """Run one wave; returns wave stats.  Resumable: reads only the
         snapshots pinned by the last committed checkpoint."""
-        _wave_t0 = time.time()
         ckpt = self.store.read_checkpoint()
         if ckpt is None:
             raise RuntimeError("bootstrap() first")
@@ -300,8 +292,6 @@ class CrawlDriver:
             nonlocal t0
             now = time.time()
             ticks[label] = round(ticks.get(label, 0.0) + (now - t0), 3)
-            if _TIMING:
-                print(f"  [wave {wave}] {label}: {now - t0:.2f}s", flush=True)
             t0 = now
 
         # the seen-bloom is built over the frontier AS PINNED — fully
@@ -334,16 +324,12 @@ class CrawlDriver:
         batch = scheduler.per_host_budget_batch(eligible).cache()
         wave_caches: list = [batch]
         try:
-            r = self._wave_body(
+            return self._wave_body(
                 wave, pinned, frontier, excluded, batch,
                 seen_count=seen_count, frontier_estimate=frontier_estimate,
                 bloom_future=bloom_future, bloom_shards=bloom_shards,
                 wave_caches=wave_caches, tick=tick, ticks=ticks,
                 recrawl_pending=recrawl_pending)
-            if _TIMING:
-                print(f"  [wave {wave}] WALL: {time.time() - _wave_t0:.2f}s",
-                      flush=True)
-            return r
         finally:
             # all exit paths (empty wave, extract failure, commit failure)
             # release the wave's executor memory and the bloom thread
@@ -672,25 +658,10 @@ class CrawlDriver:
             bases = {t: pinned.get(t, 0) for t in frames}
             return append_many_partitioned(self.store, frames, bases)
 
-        def timed(label, fn):
-            # per-task durations under SPARK_GRAFT_TIMING: the three pool
-            # tasks run concurrently, so these overlap (sum > wall) — they
-            # identify WHICH write is the wave's critical path
-            if not _TIMING:
-                return fn
-            def wrapped():
-                w0 = time.time()
-                try:
-                    return fn()
-                finally:
-                    print(f"  [wave {wave}]   {label}: {time.time() - w0:.2f}s",
-                          flush=True)
-            return wrapped
-
         with ThreadPoolExecutor(max_workers=3) as pool:
-            f_frontier = pool.submit(timed("write_frontier", write_frontier))
-            f_seen = pool.submit(timed("write_seen", write_seen))
-            f_derived = pool.submit(timed("write_derived", write_derived))
+            f_frontier = pool.submit(write_frontier)
+            f_seen = pool.submit(write_seen)
+            f_derived = pool.submit(write_derived)
             snapshots["frontier"] = f_frontier.result()
             snapshots["seen"] = f_seen.result()
             snapshots.update(f_derived.result())
@@ -706,7 +677,8 @@ class CrawlDriver:
 
         # caller's finally block unpersists batch + wave_caches
         return {"wave": wave, "fetched": batch_n - miss_n, "missing": miss_n,
-                "batch": batch_n, "recrawled": n_recrawl, "done": False}
+                "batch": batch_n, "recrawled": n_recrawl, "done": False,
+                "stage_secs": dict(ticks)}
 
     def recrawl(self, urls) -> dict:
         """Force re-crawl — the ``force=true`` path of
@@ -761,12 +733,7 @@ class CrawlDriver:
         # which the incremental bloom already believes it covers — drop
         # the bitmap so the next wave rebuilds (recrawl is an API-sized
         # rare path; correctness over the incremental saving)
-        self._bloom = None
-        self._bloom_covers = -1
-        self._bloom_capacity = 0
-        self._bloom_shards = None
-        self._shards_covers = -1
-        self._shards_capacity = 0
+        self._drop_seen_filters()
         counters["recrawl"] = int(counters.get("recrawl", 0)) + n_flip
         counters["frontier_estimate"] = int(
             counters.get("frontier_estimate", 0)) + n_new

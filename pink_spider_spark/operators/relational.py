@@ -556,8 +556,8 @@ def kaplan_meier(events: DataFrame, user_col: str = "user_id",
                  ts_col: str = "ts", censor_hours: int = 24) -> DataFrame:
     """Kaplan–Meier survival estimator (Kaplan & Meier, JASA 1958 —
     the most-cited statistics paper) over entity lifetimes — the churn
-    curve: lifetime = days between an entity's first and last event;
-    entities whose last event falls within ``censor_days`` of the
+    curve: lifetime = full hours between an entity's first and last
+    event; entities whose last event falls within ``censor_hours`` of the
     stream's end are right-CENSORED (still alive at observation end —
     the estimator's whole point; without censoring KM degenerates to
     the empirical survival function).  At each uncensored lifetime t:

@@ -5075,10 +5075,10 @@ _GATE_FIRST = [
     # positions 25-26: the two r4 driver-red rows, re-gated after their
     # interface fixes (oracle BIGINT casts / codes serialized to string)
     "docs_token_shards", "emb_pq_codes",
-    # positions 27-31: round-5 additions (freshness + traps end-to-end
+    # positions 27-44: round-5 additions (freshness + traps end-to-end
     # — the last crawl subsystems without an oracle row — plus the
     # Mann-Kendall trend, Gini load-concentration and Good-Turing
-    # estimators)
+    # estimators and the later round-5 operators)
     "frontier_freshness_priority", "frontier_trap_filter",
     "events_mann_kendall", "events_load_gini", "docs_good_turing",
     "graph_reciprocity", "docs_flesch_reading", "docs_llr_collocations",
@@ -5086,8 +5086,9 @@ _GATE_FIRST = [
     "events_assoc_rules", "graph_rank_tau", "docs_posting_gamma_bits",
     "events_audience_overlap_hll", "events_markov_transitions",
     "events_kaplan_meier", "events_hourly_acf",
-    # positions 29-49: representative core — the two flagships, one per
-    # §2 operator family, and round-3/4 heavyweights worth re-confirming
+    # positions 45-67: representative core — the two flagships, one per
+    # §2 operator family, and round-3/4 heavyweights worth re-confirming;
+    # only 45-49 fall inside the first-50 gate
     "crawl_two_waves", "docs_extract_provider_counts",
     "docs_containment_pairs", "lineitem_top3_per_order",
     "emb_kmeans", "emb_semdedup", "emb_pq_adc_topk", "graph_pagerank",

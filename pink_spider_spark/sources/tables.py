@@ -100,7 +100,7 @@ class SnapshotTable:
     #: a negligible CPU cost — at 100 TB that halves the storage + shuffle-IO
     #: footprint, and in this sandbox it halves the per-wave write volume
     #: that competes with compute when the host IO-throttles.
-    COMPRESSION = os.environ.get("PSS_PARQUET_COMPRESSION", "zstd")
+    COMPRESSION = "zstd"
 
     def _write_dir(self, df: DataFrame) -> str:
         path = self._new_data_dir()

@@ -1,22 +1,13 @@
 """Same-window A/B for per-query bench regressions.
 
-Two experiments, both interleaved so hypervisor weather hits every
-condition equally:
-
-1. ORDERING (one process): does running a heavy query immediately before
-   the target inflate the target's time (GC/cache pressure — the r3
-   suite-order hypothesis)?  Conditions per rep: target alone vs target
-   right after the heavy query.
-
-2. REV (subprocesses): same query, two engine revisions checked out as
-   worktrees, alternated A/B/A/B with a capacity probe before each run —
-   if medians match, the regression was host weather, not code.
+Same query, two engine revisions (two checkouts), run in fresh
+subprocesses alternated A/B/A/B with a capacity probe before each run, so
+host drift hits both arms equally — if the medians match, the regression
+was host weather, not code.
 
 Usage:
-  python scripts/ab_queries.py ordering --targets docs_gopher_quality,docs_line_dedup \
-      --heavy emb_near_dup_pairs_lsh_banded --reps 5
   python scripts/ab_queries.py rev --targets docs_line_dedup \
-      --other-root /tmp/repo_old --reps 5
+      --other-root /path/to/old/checkout --reps 5
 """
 
 from __future__ import annotations
@@ -27,52 +18,17 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from scaling_bench import ROOT, host_capacity_probe
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _time_query(spark, name: str) -> float:
-    from pink_spider_spark import queries as Q
-
-    t0 = time.time()
-    Q.QUERY_BUILDERS[name](spark, SF_DIR).write.mode("overwrite") \
-        .format("noop").save()
-    return time.time() - t0
-
-
-def cmd_ordering(args):
-    from pink_spider_spark.session import get_spark
-
-    spark = get_spark(app_name="ab-ordering")
-    targets = args.targets.split(",")
-    # warmup: one pass of everything so JIT/scan caches are equal
-    for name in targets + [args.heavy]:
-        _time_query(spark, name)
-    out = {t: {"alone": [], "after_heavy": []} for t in targets}
-    for _rep in range(args.reps):
-        for t in targets:
-            out[t]["alone"].append(round(_time_query(spark, t), 3))
-        _time_query(spark, args.heavy)
-        for t in targets:
-            out[t]["after_heavy"].append(round(_time_query(spark, t), 3))
-    for t, d in out.items():
-        d["median_alone"] = round(statistics.median(d["alone"]), 3)
-        d["median_after_heavy"] = round(
-            statistics.median(d["after_heavy"]), 3)
-    print(json.dumps({"experiment": "ordering", "sf_dir": SF_DIR,
-                      "heavy": args.heavy, "results": out}))
-    spark.stop()
-
+CPUS = len(os.sched_getaffinity(0))
 
 _REV_SNIPPET = r'''
 import sys, time, json
 sys.path.insert(0, sys.argv[1])
 import os
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 from pink_spider_spark.session import get_spark
 from pink_spider_spark import queries as Q
 spark = get_spark(app_name="ab-rev")
@@ -87,9 +43,6 @@ spark.stop()
 
 
 def cmd_rev(args):
-    from crawl_bench import host_capacity_probe  # scripts/ is on sys.path
-
-    sys.path.insert(0, os.path.join(ROOT, "scripts"))
     targets = args.targets.split(",")
     here_root = args.here_root or ROOT
     out = {}
@@ -97,7 +50,7 @@ def cmd_rev(args):
         runs = {"here": [], "other": [], "cap_here": [], "cap_other": []}
         for _rep in range(args.reps):
             for label, root in (("here", here_root), ("other", args.other_root)):
-                runs[f"cap_{label}"].append(round(host_capacity_probe(32), 1))
+                runs[f"cap_{label}"].append(round(host_capacity_probe(CPUS), 1))
                 r = subprocess.run(
                     [sys.executable, "-c", _REV_SNIPPET, root, t, SF_DIR],
                     capture_output=True, text=True)
@@ -116,11 +69,6 @@ def cmd_rev(args):
 def main():
     ap = argparse.ArgumentParser()
     sub = ap.add_subparsers(dest="cmd", required=True)
-    o = sub.add_parser("ordering")
-    o.add_argument("--targets", required=True)
-    o.add_argument("--heavy", default="emb_near_dup_pairs_lsh_banded")
-    o.add_argument("--reps", type=int, default=5)
-    o.set_defaults(fn=cmd_ordering)
     r = sub.add_parser("rev")
     r.add_argument("--targets", required=True)
     r.add_argument("--other-root", required=True)
@@ -129,7 +77,6 @@ def main():
     r.add_argument("--reps", type=int, default=5)
     r.set_defaults(fn=cmd_rev)
     args = ap.parse_args()
-    sys.path.insert(0, os.path.join(ROOT, "scripts"))
     args.fn(args)
 
 

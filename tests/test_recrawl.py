@@ -86,6 +86,8 @@ def test_recrawl_refreshes_entry_preserves_seen(spark, corpus):
         assert r["recrawl"] == 2 and r["inserted"] == 1
         stats = driver.run(resume=True)
         assert stats[0].get("recrawled") == 2
+        assert all({"dequeue", "entries_write", "table_writes", "checkpoint"}
+                   <= set(s["stage_secs"]) for s in stats if not s["done"])
         sim_recrawl(sim, pages_map, robots_map, items, targets,
                     max_depth=MAX_DEPTH, max_waves=20)
 

@@ -4,7 +4,7 @@ The driver's correctness gate samples the FIRST 50 entries of
 ``queries()`` in insertion order (proven in round 3: the checked set was
 exactly ``list(QUERY_BUILDERS)[:50]``).  Round-5 policy (VERDICT r4
 Next-round #3): positions 0-24 are the 25 queries the driver never
-sampled in r1-r4, 25-26 the two re-gated r4 driver-red fixes, 27-28 the
+sampled in r1-r4, 25-26 the two re-gated r4 driver-red fixes, 27-44 the
 round-5 additions, then representative core.  These tests pin that
 ordering so a future registration can't silently push an unchecked
 operator out of the gate.
