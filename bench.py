@@ -1,5 +1,6 @@
-"""Headline benchmark: engine queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS] plus a crawl-wave throughput probe.
+"""Headline benchmark: the ``@q(..., headline=True)`` queries at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] plus a crawl-wave
+throughput probe.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
@@ -16,56 +17,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "revenue_by_segment",
-    "lineitem_top3_per_order",
-    "latest_order_per_customer",
-    "recent20_events_per_user",
-    "docs_simhash",
-    "docs_minhash_lsh_pairs",
-    "docs_extract_provider_counts",
-    "emb_knn_of_vec0",
-    "emb_lsh_buckets",
-    "emb_near_dup_pairs_lsh",
-    "emb_near_dup_pairs_lsh_banded",
-    "docs_gopher_quality",
-    "docs_line_dedup",
-    # heavy round-3 operators (the sf0.1 long poles per CORRECTNESS_LOCAL
-    # timings) — tracked here so round-over-round regressions are visible
-    "docs_substring_dedup",
-    "emb_semdedup",
-    "graph_pagerank",
-    "docs_dsir_weights",
-    # round-4 operators
-    "graph_hits",
-    "docs_bm25_topk",
-    "events_distinct_users_hll",
-    "events_recrawl_priority",
-    "graph_opic",
-    "docs_simhash_near_pairs",
-    "docs_kn_bigram_bits",
-    "docs_source_rebalance",
-    "docs_simhash_dedup_clusters",
-    "docs_containment_pairs",
-    "graph_lpa",
-    "docs_textrank_keywords",
-    # round-4 late additions (this session's operator batch)
-    "docs_winnow_fingerprints",
-    "docs_nb_langid",
-    "graph_kcore",
-    "graph_hyperball",
-    "graph_harmonic_exact",
-    "docs_rake_keywords",
-    # round-4 final-commit additions (VERDICT r4 #6: keep inside the
-    # headline so BENCH_r05 carries their sf0.1 timings)
-    "docs_minhash_jaccard_est",
-    "events_cusum_peak",
-    # round-5 additions
-    "frontier_freshness_priority",
-    "frontier_trap_filter",
-]
-
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -87,7 +38,7 @@ def main():
 
     timings = {}
     total = 0.0
-    for name in HEADLINE:
+    for name in Q.HEADLINE:
         fn = Q.QUERY_BUILDERS[name]
         t0 = time.time()
         df = fn(spark, sf_dir)

@@ -33,14 +33,14 @@ DEFAULT_PER_PAGE = 25  # reference: src/main.rs:35
 
 def index(df: DataFrame, page: int = 0, per_page: int = DEFAULT_PER_PAGE,
           query: str | None = None, search_col: str = "title",
-          active: bool = False, velocity_col: str = "velocity",
-          order_col: str = "first_wave",
-          total: int | None = None) -> DataFrame:
+          active: bool = False, velocity_col: str = "velocity", *,
+          order_col: str, total: int | None = None) -> DataFrame:
     """Paginated entity index with optional search + active filter.
 
     The reference orders by updated_at DESC (src/model/mod.rs:123-138);
     engine tables carry wave numbers instead of wall-clock, so recency =
-    (first_wave DESC, natural key) — deterministic by design.
+    (``order_col`` DESC, natural key) — deterministic by design.  The
+    caller names the wave column (``entries`` has ``crawled_wave``).
 
     Physically auto-routed by ``paginate``: small dims take the window
     form, large tables the windowless TakeOrderedAndProject form (pass

@@ -43,8 +43,12 @@ def change_rate(history: DataFrame, key_cols: list, ts_col: str = "ts",
                 changed_col: str = "changed") -> DataFrame:
     """Per-key Poisson change-rate estimate from revisit observations.
     Returns (key..., n_obs, n_changes, last_seen_us, lambda_per_day);
-    keys with fewer than 2 observations carry no interval and are
-    dropped (no history ⇒ caller falls back to the default priority).
+    keys with fewer than 2 observations, or whose observations all share
+    one timestamp, carry no interval and are dropped (no history ⇒
+    caller falls back to the default priority).  The zero-span guard
+    keeps λ̂ off a division by zero, which fails a Spark ANSI-mode job
+    and is NULL or inf/NaN in DuckDB by version; the DuckDB oracles
+    apply the same HAVING.
     """
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     obs = history.select(*key_cols, us.alias("__us"),
@@ -55,7 +59,8 @@ def change_rate(history: DataFrame, key_cols: list, ts_col: str = "ts",
                 .cast("long").alias("n_changes"),
                 F.min("__us").alias("__first"),
                 F.max("__us").alias("last_seen_us"))
-           .filter(F.col("n_obs") >= 2))
+           .filter((F.col("n_obs") >= 2)
+                   & (F.col("last_seen_us") > F.col("__first"))))
     n_d = F.col("n_obs").cast("double")
     x_d = F.col("n_changes").cast("double")
     # mean revisit interval in days: span / (n-1) accesses, exact

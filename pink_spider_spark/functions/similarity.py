@@ -120,8 +120,7 @@ def near_dup_pairs_lsh_banded(df: DataFrame, threshold: float = 0.3,
                               bands: int = 16, planes_per_band: int = 4,
                               vec_col: str = "embedding",
                               id_col: str = "vec_id", dim: int = DIM,
-                              decimals: int = 4,
-                              vectorized: bool = True) -> DataFrame:
+                              decimals: int = 4) -> DataFrame:
     """Multi-band embedding near-dup: candidate pairs share ANY band's
     bucket (equi-join on (band, bucket), distinct across bands), then the
     exact cosine reranks.  Fixes the single-bucket form's recall hole
@@ -137,14 +136,13 @@ def near_dup_pairs_lsh_banded(df: DataFrame, threshold: float = 0.3,
     dedup-realistic thresholds (≥ 0.8) the same (16, 4) setting prunes
     the pair space by orders of magnitude.
 
-    ``vectorized=True`` (default) computes the signatures with the
-    bit-identical numpy mapInPandas pass
-    (banded_lsh_signatures_vectorized) — the relational form compiles a
-    ~4096-node expression tree that costs more to codegen than to run.
+    The signatures come from the numpy mapInPandas pass
+    (banded_lsh_signatures_vectorized), bit-identical to the relational
+    banded_lsh_signatures, whose ~4096-node expression tree costs more
+    to codegen than to run.
     """
-    sig_fn = (banded_lsh_signatures_vectorized if vectorized
-              else banded_lsh_signatures)
-    sig = sig_fn(df, bands, planes_per_band, vec_col, id_col, dim)
+    sig = banded_lsh_signatures_vectorized(df, bands, planes_per_band,
+                                           vec_col, id_col, dim)
     a = sig.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = sig.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cand = (a.join(b, ["band", "bucket"])

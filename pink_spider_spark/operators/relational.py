@@ -432,8 +432,9 @@ def ab_ztest(events: DataFrame, user_col: str = "user_id",
     """Two-proportion z-test (the pooled-variance test of Fleiss,
     Levin & Paik, "Statistical Methods for Rates and Proportions") —
     the experimentation primitive a crawl/ranking team runs on every
-    policy change: entities split into two deterministic variants
-    (``hash-parity of the id``, the standard bucketing), conversion =
+    policy change: entities split into two deterministic variants by
+    id parity ``abs(id % 2)``, which the oracle spells the same way, so
+    a negative id buckets alike in Spark and DuckDB; conversion =
     the entity ever emitted ``convert_type``, and
         z = (p̂₁ − p̂₂) / √( p̂(1−p̂)(1/n₁ + 1/n₂) ),
     with p̂ the pooled rate.  |z| ≥ 1.96 rejects equal rates at the
@@ -449,7 +450,7 @@ def ab_ztest(events: DataFrame, user_col: str = "user_id",
     per = (events.groupBy(F.col(user_col).alias("u"))
            .agg(F.max(F.when(F.col(type_col) == convert_type, 1)
                       .otherwise(0)).alias("conv"))
-           .select((F.pmod(F.col("u"), F.lit(2))).alias("v"), "conv"))
+           .select(F.abs(F.col("u") % 2).alias("v"), "conv"))
     g = (per.groupBy("v")
          .agg(F.count("*").cast("long").alias("n"),
               F.sum("conv").cast("long").alias("c")))

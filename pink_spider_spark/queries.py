@@ -33,6 +33,12 @@ from .operators import relational as R
 
 QUERY_BUILDERS: dict = {}
 ORACLES: dict = {}
+#: name -> (patterns the formatted physical plan must contain, patterns
+#: it must not); tests/test_plan_audit.py also fails any plan holding a
+#: CartesianProduct its ``must`` does not name
+PLAN_CHECKS: dict = {}
+#: the queries bench.py times, in definition order
+HEADLINE: list = []
 
 #: SCALE markers: queries registered ONLY as small-scale correctness
 #: verifiers for a bucketed scale twin.  They contain deliberate
@@ -44,10 +50,14 @@ VERIFIER_ONLY: dict = {
 }
 
 
-def q(name: str, oracle: str | None = None):
+def q(name: str, oracle: str | None = None, must=(), must_not=(),
+      headline: bool = False):
     def deco(fn):
         QUERY_BUILDERS[name] = fn
         ORACLES[name] = oracle
+        PLAN_CHECKS[name] = (tuple(must), tuple(must_not))
+        if headline:
+            HEADLINE.append(name)
         return fn
     return deco
 
@@ -95,7 +105,7 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_orderkey
         ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rank_in_key
       FROM lineitem WHERE l_orderkey <= 2000)
 WHERE rank_in_key <= 3
-""")
+""", headline=True)
 def lineitem_top3_per_order(spark, sf_dir):
     """Per-key top-k window (reference intent of LIMIT n*k joins:
     src/model/playlist.rs:272-291, src/model/playlist_track.rs:41-70)."""
@@ -134,7 +144,7 @@ def customers_without_recent_orders(spark, sf_dir):
 # =====================================================================
 @q("part_search_red", """
 SELECT p_partkey, p_name FROM part WHERE lower(p_name) LIKE '%red%'
-""")
+""", must=["PushedFilters"])
 def part_search_red(spark, sf_dir):
     """?query= contains filter (reference: src/main.rs:45-51)."""
     return R.contains_filter(_t(spark, sf_dir, "part"), "p_name", "red") \
@@ -147,7 +157,7 @@ def part_search_red(spark, sf_dir):
 @q("active_suppliers", """
 SELECT s_suppkey, s_name, CAST(round(s_acctbal*100) AS BIGINT) AS acctbal_cents
 FROM supplier WHERE s_acctbal > 0
-""")
+""", must=["GreaterThan(s_acctbal"])
 def active_suppliers(spark, sf_dir):
     """velocity>0 'active' filter analog (reference: src/main.rs:52-59,
     src/model/playlist.rs:263-270)."""
@@ -183,7 +193,7 @@ SELECT n.n_name, CAST(count(*) AS BIGINT) AS n_customers,
        CAST(sum(CAST(round(c.c_acctbal*100) AS BIGINT)) AS BIGINT) AS acctbal_cents
 FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY n.n_name
-""")
+""", must=["BroadcastHashJoin"], must_not=["SortMergeJoin"])
 def nation_customer_rollup(spark, sf_dir):
     """Relation hydration as broadcast join + agg (reference set_relations
     batch joins: src/model/track.rs:162-176)."""
@@ -224,7 +234,7 @@ SELECT o_custkey, o_orderkey, o_orderdate
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
         ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders)
 WHERE rn = 1
-""")
+""", must=["Window"], headline=True)
 def latest_order_per_customer(spark, sf_dir):
     """ORDER BY recency take-first (reference: src/model/enclosure.rs:12-25)."""
     orders = _t(spark, sf_dir, "orders")
@@ -239,7 +249,7 @@ def latest_order_per_customer(spark, sf_dir):
 @q("events_after_jan15", """
 SELECT event_type, CAST(count(*) AS BIGINT) AS cnt FROM events
 WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' GROUP BY event_type
-""")
+""", must=["PushedFilters"])
 def events_after_jan15(spark, sf_dir):
     """published >= ts scan (reference: src/model/entry.rs:227-237)."""
     return (
@@ -261,7 +271,7 @@ FROM events
 WHERE ts < TIMESTAMP '2024-01-15 00:00:00'
    OR (ts = TIMESTAMP '2024-01-15 00:00:00' AND event_id < 500)
 ORDER BY ts DESC, event_id DESC LIMIT 25
-""")
+""", must=["PushedFilters", "TakeOrderedAndProject"], must_not=["Window"])
 def events_page_after(spark, sf_dir):
     """Keyset page fetch: 25 rows strictly after the cursor
     (cursor = last row of the previous page).  Mirrors the reference's
@@ -285,7 +295,7 @@ def events_page_after(spark, sf_dir):
 @q("orders_mget", """
 SELECT o_orderkey, o_custkey, CAST(round(o_totalprice*100) AS BIGINT) AS total_cents
 FROM orders WHERE o_orderkey IN (1,2,3,5,8,13,21,34,55,89)
-""")
+""", must=["PushedFilters: [In(o_orderkey"])
 def orders_mget(spark, sf_dir):
     """= ANY($ids) batched lookup (reference: src/main.rs:221-227,
     src/model/track.rs:336-354)."""
@@ -323,7 +333,7 @@ SELECT c.c_mktsegment,
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment
-""")
+""", must=["BroadcastHashJoin"], headline=True)
 def revenue_by_segment(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -362,7 +372,7 @@ SELECT user_id, event_id, CAST(rank_in_key AS BIGINT) AS rank_in_key
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
         ORDER BY ts DESC, event_id DESC) AS rank_in_key FROM events)
 WHERE rank_in_key <= 20
-""")
+""", headline=True)
 def recent20_events_per_user(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     return R.topk_per_key(ev, ["user_id"], [F.desc("ts"), F.desc("event_id")], 20) \
@@ -401,7 +411,7 @@ def docs_fingerprint(spark, sf_dir):
 @q("docs_token_count", """
 SELECT doc_id, CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_tokens
 FROM documents
-""")
+""", must=["ReadSchema: struct<doc_id:bigint,text:string>"])
 def docs_token_count(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.select("doc_id",
@@ -516,7 +526,7 @@ sig AS (SELECT doc_id, seed, min(h) AS minhash FROM seeded GROUP BY doc_id, seed
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM banded a JOIN banded b
   ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-""")
+""", headline=True)
 def docs_minhash_lsh_pairs(spark, sf_dir):
     """MinHash (16 perms) + 4-band LSH candidate pairs (docs 0..149)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
@@ -552,7 +562,7 @@ SELECT ag.id_a, ag.id_b, ag.agree_n,
              / (za.n + zb.n - COALESCE(itr.i, 0)), 4) AS jaccard_exact
 FROM ag LEFT JOIN itr ON itr.id_a = ag.id_a AND itr.id_b = ag.id_b
 JOIN sz za ON za.doc_id = ag.id_a JOIN sz zb ON zb.doc_id = ag.id_b
-""")
+""", must_not=["BroadcastNestedLoopJoin"], headline=True)
 def docs_minhash_jaccard_est(spark, sf_dir):
     """Broder resemblance estimator audit (Broder 1997 §3:
     P[minhash agrees] = Jaccard): for every banded-LSH candidate
@@ -579,7 +589,7 @@ bits AS (
 SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT)
   AS simhash
 FROM bits GROUP BY doc_id
-""")
+""", headline=True)
 def docs_simhash(spark, sf_dir):
     """60-bit SimHash per document — vectorized numpy path (the oracle SQL
     is the relational spec, so the hash check pins UDF == DuckDB; UDF ==
@@ -619,7 +629,7 @@ sh_pairs AS (
 
 @q("docs_simhash_near_pairs", "WITH " + _SIMHASH_PAIRS_CTES + """
 SELECT id_a, id_b, hamming FROM sh_pairs
-""")
+""", must_not=["BroadcastNestedLoopJoin", "Window"], headline=True)
 def docs_simhash_near_pairs(spark, sf_dir):
     """SimHash Hamming near-dup pairs (Manku, Jain & Das Sarma, WWW
     2007 — the Google crawl near-dup detector): 60-bit simhash split
@@ -659,7 +669,7 @@ inter AS (SELECT c.id_a, c.id_b, c.n_a, count(*) AS n_common
 SELECT id_a AS contained_id, id_b AS container_id,
        round(n_common / CAST(n_a AS DOUBLE), 4) AS containment
 FROM inter WHERE round(n_common / CAST(n_a AS DOUBLE), 4) >= 0.8
-""")
+""", must_not=["BroadcastNestedLoopJoin"], headline=True)
 def docs_containment_pairs(spark, sf_dir):
     """Asymmetric near-dup detection — exact shingle CONTAINMENT pairs
     (Broder 1997): C(A,B) = |S(A)∩S(B)|/|S(A)| ≥ 0.8 over 12-char
@@ -688,7 +698,7 @@ sizes AS (SELECT cluster_id, count(*) AS sz FROM lab GROUP BY cluster_id)
 SELECT l.doc_id, CAST(l.cluster_id AS BIGINT) AS cluster_id,
        CAST(s.sz AS BIGINT) AS cluster_size
 FROM lab l JOIN sizes s USING (cluster_id)
-""")
+""", must_not=["Window", "BroadcastNestedLoopJoin"], headline=True)
 def docs_simhash_dedup_clusters(spark, sf_dir):
     """End-to-end SimHash dedup (the full Manku et al. 2007 pipeline):
     Hamming-≤3 pair generation via the exact-recall block join, then
@@ -721,7 +731,9 @@ SELECT vec_id,
     (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)), 4) AS sim
 FROM embeddings WHERE vec_id <> 0
 ORDER BY sim DESC, vec_id ASC LIMIT 10
-""")
+""",
+   must=["ReadSchema: struct<vec_id:bigint,embedding:array<float>>"],
+   headline=True)
 def emb_knn_of_vec0(spark, sf_dir):
     """Brute-force cosine top-10 neighbors of vec 0 (ANN baseline)."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -741,7 +753,7 @@ def _planes_sql_case(n_planes: int = 8, dim: int = 64) -> str:
 
 @q("emb_lsh_buckets", f"""
 SELECT vec_id, ({_planes_sql_case()}) AS bucket FROM embeddings
-""")
+""", headline=True)
 def emb_lsh_buckets(spark, sf_dir):
     """Random-hyperplane LSH bucket assignment (ANN scale path)."""
     return S.lsh_bucket(_t(spark, sf_dir, "embeddings"))
@@ -971,7 +983,7 @@ SELECT a.vec_id AS id_a, b.vec_id AS id_b,
   round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
 FROM buckets a JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-""")
+""", must_not=["BroadcastNestedLoopJoin"], headline=True)
 def emb_near_dup_pairs_lsh(spark, sf_dir):
     """Near-dup pairs at scale: LSH-bucket equi-join candidates + exact
     cosine rerank (no O(n^2) join anywhere in the plan).  The exact
@@ -1014,7 +1026,7 @@ JOIN embeddings ea ON ea.vec_id = c.id_a
 JOIN embeddings eb ON eb.vec_id = c.id_b
 WHERE list_cosine_similarity(ea.embedding::DOUBLE[],
                              eb.embedding::DOUBLE[]) >= 0.3
-""")
+""", must_not=["BroadcastNestedLoopJoin"], headline=True)
 def emb_near_dup_pairs_lsh_banded(spark, sf_dir):
     """Banded hyperplane LSH near-dup (16 bands × 4 planes): candidates
     share ANY band bucket — recall ≥ 0.9 at threshold 0.3 vs the exact
@@ -1118,7 +1130,7 @@ def docs_to_pages(spark, sf_dir):
 @q("docs_extract_provider_counts", f"""
 SELECT {_PROVIDER_CASE} AS provider, CAST(count(*) AS BIGINT) AS cnt
 FROM documents WHERE doc_id % 3 = 0 GROUP BY 1
-""")
+""", headline=True)
 def docs_extract_provider_counts(spark, sf_dir):
     """END-TO-END extraction check: build HTML pages from documents, run
     the real extract UDF, count enclosures per provider; DuckDB verifies
@@ -1221,7 +1233,9 @@ SELECT doc_id, n_words, mean_word_len, ttr, top_token_frac,
   (n_words >= 40 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
    AND ttr >= 0.35 AND top_token_frac <= 0.12) AS passes_gopher
 FROM sig
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange", "Window"], headline=True)
 def docs_gopher_quality(spark, sf_dir):
     """Gopher-style repetition/quality signals, all in-row JVM
     expressions (functions/webtext.py gopher_signals)."""
@@ -1244,7 +1258,7 @@ kept AS (
 SELECT doc_id, CAST(count(*) AS BIGINT) AS kept_lines,
        string_agg(line, chr(10) ORDER BY pos) AS dedup_text
 FROM kept GROUP BY doc_id
-""")
+""", must=["HashAggregate"], must_not=["Window"], headline=True)
 def docs_line_dedup(spark, sf_dir):
     """Corpus-level first-seen line dedup (RefinedWeb-style), lines
     derived by deterministic 10-token wrap (the synthetic corpus is
@@ -1345,7 +1359,9 @@ SELECT doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
        CASE WHEN NOT bad AND len(kept) >= 3
             THEN array_to_string(kept, chr(10)) END AS clean_text
 FROM ev
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange", "Window"])
 def docs_c4_clean(spark, sf_dir):
     """C4 line + page cleaning (Raffel et al. 2020 §2.2): terminal-
     punctuation line filter, >=5-word line filter, 'javascript' line
@@ -1378,7 +1394,7 @@ SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_sentences,
                            chr(10) ORDER BY s.sp), '') AS clean_text
 FROM sent s LEFT JOIN rmpos r ON s.doc_id = r.doc_id AND s.sp = r.sp
 GROUP BY s.doc_id
-""")
+""", must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def docs_c4_span_dedup(spark, sf_dir):
     """C4 cross-document three-sentence-span dedup (Raffel et al. 2020
     §2.2: 'we discarded all but one of any three-sentence span occurring
@@ -1430,7 +1446,9 @@ SELECT doc_id,
       '[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}', '<EMAIL>', 'g'),
       '\\d{3}-\\d{4}', '<PHONE>', 'g')) AS scrub_hash
 FROM aug
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange"])
 def docs_pii_scrub(spark, sf_dir):
     """PII redaction over a deterministically PII-augmented view (the
     synthetic corpus carries no PII, so the query injects emails on
@@ -1465,7 +1483,9 @@ SELECT vec_id, round(scale, 8) AS scale,
        CAST(list_sum(list_transform(qv, x -> abs(x))) AS BIGINT) AS q_l1,
        CAST(len(list_filter(qv, x -> abs(x) = 127)) AS BIGINT) AS saturated
 FROM q
-""")
+""",
+   must=["ReadSchema: struct<vec_id:bigint,embedding:array<float>>"],
+   must_not=["Exchange"])
 def emb_int8_quantize(spark, sf_dir):
     """Symmetric int8 embedding quantization stats (scale, |q|_1,
     saturated dims) — the embedding-storage scale path
@@ -1529,7 +1549,7 @@ SELECT doc_id, lang, source FROM documents
 WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10000 <
   CAST(round(CASE lang WHEN 'en' THEN 0.5 WHEN 'zh' THEN 0.2 ELSE 0.1 END
        * 10000) AS BIGINT)
-""")
+""", must_not=["Exchange", "Window"])
 def docs_stratified_sample(spark, sf_dir):
     """Deterministic hash-stratified sampling for training-mix
     construction: 50% of en, 20% of zh, 10% of the rest — same rows on
@@ -1553,7 +1573,10 @@ WHERE CAST(('0x' || substr(md5('mix-' || CAST(d.doc_id AS VARCHAR)),
                            1, 15))::BIGINT AS HUGEINT)
       * (star.w_star * cnt.c)
     < CAST(star.c_star * cnt.w AS HUGEINT) * 1152921504606846976
-""")
+""",
+   # the 1-row bottleneck is a bounded broadcast
+   must=["BroadcastHashJoin"], must_not=["Window", "SortMergeJoin"],
+   headline=True)
 def docs_source_rebalance(spark, sf_dir):
     """Deterministic source-mixture rebalancing (data mixing, cf.
     DoReMi / The Pile domain weights): derive per-source keep rates
@@ -1613,7 +1636,9 @@ WHERE rk <= 3
 """)
 
 
-@q("docs_textrank_keywords", _TEXTRANK_SQL)
+@q("docs_textrank_keywords", _TEXTRANK_SQL,
+   # the one Window is the per-document top-k
+   must=["Window"], must_not=["BroadcastNestedLoopJoin"], headline=True)
 def docs_textrank_keywords(spark, sf_dir):
     """Per-document TextRank keywords (Mihalcea & Tarau 2004): weighted
     PageRank over each document's word-adjacency graph, top-3 words per
@@ -1651,7 +1676,7 @@ tri AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles FROM (
 SELECT d.a AS node, d.deg AS degree,
        coalesce(t.triangles, 0) AS triangles
 FROM deg d LEFT JOIN tri t ON d.a = t.node
-""")
+""", must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_triangles(spark, sf_dir):
     """Per-node triangle counts via degree-ordered compact-forward
     (Schank & Wagner 2005; Suri & Vassilvitskii WWW 2011 'curse of the
@@ -1710,7 +1735,9 @@ FROM l4 JOIN sizes ON l4.lbl = sizes.lbl
 """)
 
 
-@q("graph_lpa", _LPA_SQL)
+@q("graph_lpa", _LPA_SQL,
+   must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"],
+   headline=True)
 def graph_lpa(spark, sf_dir):
     """Label-propagation communities (Raghavan et al. 2007) over the
     customer→supplier purchase graph, SEMI-SYNCHRONOUS schedule
@@ -1763,7 +1790,7 @@ te AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
 SELECT ce.doc_id, ce.n_chars, ce.char_entropy,
        te.n_tokens, te.token_entropy
 FROM ce LEFT JOIN te USING (doc_id)
-""")
+""", must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def docs_entropy_signals(spark, sf_dir):
     """Per-document Shannon character and token entropy (Shannon 1948)
     — the information-theoretic quality signals beside Gopher's ratios
@@ -1835,7 +1862,8 @@ SELECT node, est AS coreness FROM e4
 """)
 
 
-@q("graph_kcore", _KCORE_SQL)
+@q("graph_kcore", _KCORE_SQL,
+   must_not=["BroadcastNestedLoopJoin"], headline=True)
 def graph_kcore(spark, sf_dir):
     """k-core decomposition via distributed h-index rounds (Montresor
     et al. IEEE TPDS 2013; Seidman 1983's coreness): est init =
@@ -1896,7 +1924,8 @@ FROM s1 JOIN s2 ON s1.v = s2.v JOIN s3 ON s1.v = s3.v
 """)
 
 
-@q("graph_harmonic_exact", _HARMONIC_SQL)
+@q("graph_harmonic_exact", _HARMONIC_SQL,
+   must_not=["Window", "BroadcastNestedLoopJoin"], headline=True)
 def graph_harmonic_exact(spark, sf_dir):
     """Exact bounded-radius harmonic centrality (Boldi & Vigna 2014 —
     the metric behind Common Crawl's official host ranking):
@@ -1947,7 +1976,8 @@ FROM f0 JOIN f1 USING (node) JOIN f2 USING (node) JOIN f3 USING (node)
 """)
 
 
-@q("graph_hyperball", _HYPERBALL_SQL)
+@q("graph_hyperball", _HYPERBALL_SQL,
+   must_not=["Window", "BroadcastNestedLoopJoin"], headline=True)
 def graph_hyperball(spark, sf_dir):
     """HyperBall (Boldi, Rosa & Vigna WWW 2011/2013) — Common Crawl's
     harmonic-centrality algorithm: per-node HLL counters of the t-hop
@@ -2002,7 +2032,9 @@ SELECT n_nodes, n_edges, n_recip, round(rr, 6) AS r,
        round(CASE WHEN abar < 1.0
                   THEN (rr - abar) / (1.0 - abar) END, 6) AS rho
 FROM j
-""")
+""",
+   # the three 1-row counters combine via bounded broadcasts
+   must_not=["Window", "SortMergeJoin"])
 def graph_reciprocity(spark, sf_dir):
     """Directed-graph reciprocity (Garlaschelli & Loffredo, PRL 2004):
     r = L↔/L over the DIRECTED fixture edge set (pre-symmetrization —
@@ -2038,7 +2070,9 @@ SELECT doc_id, n_words, n_sentences, n_syllables, flesch,
             WHEN flesch >= 30 THEN 'difficult'
             ELSE 'very_difficult' END AS band
 FROM sc
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange", "Join", "Window"])
 def docs_flesch_reading(spark, sf_dir):
     """Flesch reading ease (Flesch 1948): 206.835 − 1.015·(words/
     sentences) − 84.6·(syllables/words) with the vowel-group-run
@@ -2050,7 +2084,8 @@ def docs_flesch_reading(spark, sf_dir):
     return W.flesch_reading(_t(spark, sf_dir, "documents"))
 
 
-@q("graph_assortativity", _ASSORT_SQL)
+@q("graph_assortativity", _ASSORT_SQL,
+   must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_assortativity(spark, sf_dir):
     """Degree assortativity (Newman PRL 2002): the one-number
     degree-correlation summary — negative for hub-and-spoke crawl
@@ -2082,7 +2117,8 @@ FROM nonadj n JOIN deg du ON du.node = n.u JOIN deg dv ON dv.node = n.v
 """)
 
 
-@q("graph_adamic_adar", _AA_SQL)
+@q("graph_adamic_adar", _AA_SQL,
+   must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_adamic_adar(spark, sf_dir):
     """Adamic–Adar link prediction (Adamic & Adar 2003; Liben-Nowell &
     Kleinberg CIKM 2003): score non-adjacent pairs by Σ 1/ln(deg(w))
@@ -2132,7 +2168,9 @@ FROM m0, m1, m2, m3
 """)
 
 
-@q("graph_eff_diameter", _ANF_SQL)
+@q("graph_eff_diameter", _ANF_SQL,
+   # the R+1 one-row totals combine via bounded broadcasts
+   must_not=["Window"])
 def graph_eff_diameter(spark, sf_dir):
     """ANF neighborhood function + effective diameter (Palmer, Gibbons
     & Faloutsos KDD 2002, via HyperBall counters): N(t) = Σ|B(v,t)|
@@ -2145,7 +2183,9 @@ def graph_eff_diameter(spark, sf_dir):
                                      rounds=3)
 
 
-@q("graph_bfs_hops", _BFS_SQL)
+@q("graph_bfs_hops", _BFS_SQL,
+   # per-round aggs hide behind localCheckpoint; only absences are assertable
+   must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_bfs_hops(spark, sf_dir):
     """BFS hop distances from node 0 over the 3000-node fixture graph
     (the graph_triangles ring+chords+hub), 4 synchronous frontier
@@ -2190,7 +2230,9 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
        CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
          AS dup_chunks
 FROM fr GROUP BY doc_id
-""")
+""",
+   # never a window over the hot chunk key
+   must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def docs_cdc_dedup(spark, sf_dir):
     """Content-defined chunking dedup (LBFS, Muthitacharoen et al. SOSP
     2001; FastCDC is the gear-hash speedup): boundaries where the
@@ -2225,7 +2267,9 @@ SELECT fp.doc_id, CAST(count(*) AS BIGINT) AS n_fp,
        CAST(sum(CASE WHEN sh.nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
          AS shared_fp
 FROM fp JOIN sh USING (h) GROUP BY fp.doc_id
-""")
+""",
+   must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"],
+   headline=True)
 def docs_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprints (Schleimer, Wilkerson & Aiken SIGMOD
     2003 — the MOSS algorithm): hash every 8-gram, select the minimum
@@ -2272,7 +2316,7 @@ a AS (SELECT grp, CAST(max(n) AS BIGINT) AS n,
 SELECT a.grp AS event_type, a.n, a.chi2,
        CAST(w.fd AS BIGINT) AS worst_digit
 FROM a JOIN w ON a.grp = w.grp AND w.rn = 1
-""")
+""", must=["PushedFilters"], must_not=["BroadcastNestedLoopJoin"])
 def events_benford(spark, sf_dir):
     """Benford first-digit screening (Benford 1938; Nigrini 1996 —
     the forensic test for fabricated numeric streams, a crawl-health
@@ -2304,7 +2348,9 @@ SELECT doc_id, n AS n_chars, n_replacement, n_mojibake, n_ctrl,
        (n_replacement = 0 AND n_mojibake = 0 AND n_ctrl = 0)
          AS looks_clean
 FROM c
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange", "Window", "Join"])
 def docs_encoding_signals(spark, sf_dir):
     """Encoding-health triage (the mojibake/binary pre-filter of
     CCNet/RefinedWeb-style pipelines): U+FFFD replacement chars,
@@ -2347,7 +2393,9 @@ SELECT CAST(n AS BIGINT) AS n_docs, total_tokens, vocab_size,
        CAST(sy * sxx - sx * sxy AS DOUBLE)
          / CAST(n * sxx - sx * sx AS DOUBLE) / 1e6 AS heaps_lnk
 FROM a
-""")
+""",
+   # one deliberate window, over the per-document series (sublinear)
+   must=["HashAggregate"])
 def docs_heaps_fit(spark, sf_dir):
     """Heaps'-law vocabulary-growth fit (Heaps 1978 / Herdan 1960):
     V(n) ≈ K·n^β over per-document cumulative (tokens, vocab) points —
@@ -2376,7 +2424,7 @@ SELECT doc_id, m1 AS n_tokens,
        round((CAST(m2 AS DOUBLE) - m1)
              / (CAST(m1 AS DOUBLE) * (m1 - 1)), 6) AS simpson_d
 FROM agg WHERE m1 >= 2
-""")
+""", must=["HashAggregate"], must_not=["Window", "Join"])
 def docs_yule_richness(spark, sf_dir):
     """Yule's K (1944) + Simpson's repeat-rate D — length-robust
     lexical-richness signals beside TTR: K = 10⁴(M2−M1)/M1²,
@@ -2398,7 +2446,7 @@ cand AS (SELECT DISTINCT a.name AS name_a, b.name AS name_b
 SELECT name_a, name_b,
        CAST(levenshtein(name_a, name_b) AS BIGINT) AS dist
 FROM cand WHERE levenshtein(name_a, name_b) <= 2
-""")
+""", must_not=["BroadcastNestedLoopJoin", "Window"])
 def part_fuzzy_name_pairs(spark, sf_dir):
     """Blocked edit-distance similarity join (Gravano et al. VLDB
     2001): distinct part names pair only if they share a token AND
@@ -2444,7 +2492,9 @@ SELECT doc_id, phrase, score6 FROM (
                             ORDER BY psc.score6 DESC, p.phrase) AS rn
   FROM ph p JOIN psc USING (doc_id, grp))
 WHERE rn <= 3
-""")
+""",
+   # the Windows are the per-doc islands and per-doc top-k
+   must=["Window"], must_not=["BroadcastNestedLoopJoin"], headline=True)
 def docs_rake_keywords(spark, sf_dir):
     """RAKE keyword extraction (Rose, Engel, Cramer & Cowley 2010) —
     the non-graph companion to docs_textrank_keywords: phrases are
@@ -2468,7 +2518,9 @@ SELECT doc_id, n_chars,
        CAST(len(list_distinct(tks)) AS BIGINT) AS n_distinct_pretokens,
        round(CAST(n_chars AS DOUBLE) / len(tks), 4) AS chars_per_pretoken
 FROM t WHERE len(tks) > 0
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint,text:string>"],
+   must_not=["Exchange", "Window", "Join"])
 def docs_bpe_pretokens(spark, sf_dir):
     """Tokenizer-fertility signals from GPT-2-style pre-tokenization
     (Radford et al. 2019's regex in its RE2-compatible form —
@@ -2495,7 +2547,9 @@ SELECT s10.doc_id, CAST(shard10 AS BIGINT) AS shard10,
        CAST(shard11 AS BIGINT) AS shard11,
        (shard10 <> shard11) AS moved
 FROM s10 JOIN s11 ON s10.doc_id = s11.doc_id
-""")
+""",
+   must=["ReadSchema: struct<doc_id:bigint>"],
+   must_not=["Exchange", "Window", "Join"])
 def docs_rendezvous_shards(spark, sf_dir):
     """Rendezvous / highest-random-weight sharding (Thaler &
     Ravishankar 1996): shard = argmax over s of h60('hrw-<s>-<key>')
@@ -2551,7 +2605,10 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
                                    ORDER BY sc6 DESC, cls) AS rn
       FROM base)
 WHERE rn = 1
-""")
+""",
+   # the k-row class crossJoins are broadcast
+   must=["HashAggregate", "BroadcastHashJoin"], must_not=["Window"],
+   headline=True)
 def docs_nb_langid(spark, sf_dir):
     """Multinomial Naive Bayes language classifier (McCallum & Nigam
     AAAI-98): train token|class multinomials with Laplace smoothing on
@@ -2583,7 +2640,7 @@ SELECT code >> 10 AS file_id, CAST(count(*) AS BIGINT) AS n_rows,
        CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
        CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
 FROM c GROUP BY 1
-""")
+""", must=["HashAggregate"], must_not=["Window", "Join"])
 def events_zorder_layout(spark, sf_dir):
     """Z-order (Morton) data layout planning over events (Morton 1966;
     the Delta/Iceberg OPTIMIZE ZORDER BY technique): interleave
@@ -2643,7 +2700,7 @@ f AS (SELECT coalesce(bm.doc_id, kn.doc_id) AS doc_id, bm.rb, kn.rk,
 SELECT doc_id, CAST(rb AS BIGINT) AS bm25_rank,
        CAST(rk AS BIGINT) AS knn_rank, rrf
 FROM f ORDER BY rrf DESC, doc_id LIMIT 10
-""")
+""", must=["Window"])
 def docs_hybrid_rrf(spark, sf_dir):
     """Hybrid retrieval by Reciprocal Rank Fusion (Cormack, Clarke &
     Büttcher SIGIR 2009): the BM25 top-20 for the standing query terms
@@ -2684,7 +2741,7 @@ m AS (SELECT p0.doc_id, p0.pos AS p0
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
        CAST(min(p0) AS BIGINT) AS first_pos
 FROM m GROUP BY doc_id
-""")
+""", must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def docs_phrase_search(spark, sf_dir):
     """Exact phrase search 'part filter scan' over a positional index
     (IIR §2.4): postings pruned to the phrase terms before any shuffle,
@@ -2709,7 +2766,7 @@ SELECT e.vec_id, sg.j, CAST(sum(sgn * x6) AS BIGINT) AS y6,
        CAST(sum(sgn * x6) AS BIGINT) / 4000000.0 AS y
 FROM e JOIN sg ON e.pos = sg.pos
 GROUP BY e.vec_id, sg.j
-""")
+""", must=["BroadcastHashJoin"], must_not=["Window", "SortMergeJoin"])
 def emb_jl_project(spark, sf_dir):
     """Johnson–Lindenstrauss ±1 random projection (Achlioptas 2003)
     64→16 dims over the embeddings table: R from h60 sign bits,
@@ -2738,7 +2795,9 @@ sc AS (SELECT w1, w2, c2,
                JOIN uni ur ON bi.w2 = ur.w, n1 n, n2)
 SELECT w1, w2, c2, round(ln(num::DOUBLE / den), 4) AS pmi
 FROM sc ORDER BY num::DOUBLE / den DESC, w1, w2 LIMIT 20
-""")
+""",
+   # the 1-row totals are bounded broadcasts
+   must=["TakeOrderedAndProject"], must_not=["Window"])
 def docs_pmi_collocations(spark, sf_dir):
     """Top-20 collocations by pointwise mutual information (Church &
     Hanks 1990) over adjacent token pairs, min count 5.  The ranking
@@ -2778,7 +2837,9 @@ SELECT w1, w2, c2,
               / ((nn - r1) * (nn - r2))::DOUBLE) ELSE 0.0 END)), 4)
     AS llr
 FROM sc
-""")
+""",
+   # the 1-row total is a bounded broadcast
+   must_not=["Window"])
 def docs_llr_collocations(spark, sf_dir):
     """Collocations by Dunning's log-likelihood ratio (CL 1993) — the
     sparse-count-robust replacement for PMI: G² over the 2×2 bigram
@@ -2800,7 +2861,9 @@ h AS (SELECT doc_id, lang,
 SELECT doc_id, lang FROM h JOIN cnt USING (lang), cmin
 WHERE hb::HUGEINT * hb::HUGEINT * c::HUGEINT
       < c_min::HUGEINT * 77371252455336267181195264::HUGEINT
-""")
+""",
+   # the one BroadcastNestedLoopJoin is the 1-row bottleneck broadcast
+   must=["BroadcastHashJoin"], must_not=["Window", "SortMergeJoin"])
 def docs_temperature_sample(spark, sf_dir):
     """Temperature-based multilingual resampling, alpha = 1/2 (the
     mBERT/XLM-R exponentiated smoothing) over the corpus languages —
@@ -2826,7 +2889,7 @@ keyed AS (SELECT doc_id, w,
           FROM t)
 SELECT doc_id, w, round(key, 8) + 0 AS ws_key
 FROM keyed ORDER BY key DESC, doc_id LIMIT 100
-""")
+""", must=["TakeOrderedAndProject"], must_not=["Window", "Exchange"])
 def docs_weighted_sample(spark, sf_dir):
     """Weighted sampling without replacement (Efraimidis & Spirakis
     2006, A-Res): top-100 documents by the deterministic key
@@ -2859,7 +2922,9 @@ SELECT doc_id, n_grams, hit_grams,
        round(hit_grams / CAST(n_grams AS DOUBLE), 4) AS contamination_frac,
        (round(hit_grams / CAST(n_grams AS DOUBLE), 4) >= 0.5) AS contaminated
 FROM sc
-""")
+""",
+   must=["BroadcastHashJoin"],
+   must_not=["SortMergeJoin", "BroadcastNestedLoopJoin"])
 def docs_decontaminate(spark, sf_dir):
     """Benchmark decontamination: distinct word-3-gram overlap of every
     candidate doc against the benchmark set (doc_id % 23 == 0 stands in
@@ -2883,7 +2948,9 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
        round(-avg(log2(c / total)), 4) AS bits_per_token
 FROM tok JOIN v USING (token), tot
 GROUP BY doc_id
-""")
+""",
+   # vocab and total both come back broadcast
+   must=["BroadcastHashJoin", "HashAggregate"], must_not=["SortMergeJoin"])
 def docs_unigram_logprob(spark, sf_dir):
     """CCNet-style unigram LM quality proxy: -mean log2 P(token) per doc
     under the corpus unigram model (functions/webtext.py
@@ -2913,7 +2980,9 @@ SELECT o.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
        round(-avg(log2(m.p)), 4) AS kn_bits
 FROM occ o JOIN model m ON o.w1 = m.w1 AND o.w2 = m.w2
 GROUP BY o.doc_id
-""")
+""",
+   # the 1-row total is a bounded broadcast
+   must=["HashAggregate"], must_not=["Window"], headline=True)
 def docs_kn_bigram_bits(spark, sf_dir):
     """Kneser-Ney-smoothed bigram LM quality score (Kneser & Ney 1995;
     Chen & Goodman 1998, d=0.75): per-doc bits-per-bigram under a
@@ -3038,7 +3107,10 @@ dup AS (SELECT DISTINCT ai.vec_id
 SELECT a2.vec_id, CAST(a2.cid AS BIGINT) AS cluster,
        dup.vec_id IS NULL AS kept
 FROM a2 LEFT JOIN dup USING (vec_id)
-""")
+""",
+   # the one BroadcastNestedLoopJoin is kmeans_assign's k=8-row centroid
+   # broadcast
+   must_not=["Window"], headline=True)
 def emb_semdedup(spark, sf_dir):
     """SemDedup (Abbas et al. 2023): drop a vector iff a lower-id
     member of its k-means cluster has cosine >= 0.35 — cluster-gated
@@ -3081,7 +3153,7 @@ FROM a2 JOIN probe USING (cid)
 JOIN embeddings emb ON emb.vec_id = a2.vec_id
 WHERE a2.vec_id <> 0
 ORDER BY sim DESC, a2.vec_id ASC LIMIT 10
-""")
+""", must=["TakeOrderedAndProject"], must_not=["Window"])
 def emb_ann_ivf_of_vec0(spark, sf_dir):
     """IVF ANN (FAISS IndexIVFFlat shape): k-means-partitioned corpus,
     exact rerank restricted to the nprobe=2 clusters whose centroids are
@@ -3121,7 +3193,7 @@ r3 AS (SELECT nodes.node,
               round(0.15 / nn.n + 0.85 * coalesce(p3.c, 0), 8) AS rank
        FROM nodes CROSS JOIN nn LEFT JOIN p3 ON nodes.node = p3.node)
 SELECT node, rank FROM r3
-""")
+""", headline=True)
 def graph_pagerank(spark, sf_dir):
     """Link-graph PageRank (3 rounds, d=0.85, 8-dp-pinned trajectory)
     over the customer→supplier purchase graph — the frontier-priority
@@ -3170,7 +3242,9 @@ r3 AS (SELECT sv.node, round(0.15 * sv.s + 0.85 * coalesce(p3.c, 0), 8)
               AS rank
        FROM sv LEFT JOIN p3 ON sv.node = p3.node)
 SELECT node, rank AS trust FROM r3
-""")
+""",
+   # per-round plans hide behind localCheckpoint
+   must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_trustrank(spark, sf_dir):
     """TrustRank (Gyöngyi, Garcia-Molina & Pedersen VLDB 2004): biased
     PageRank whose teleport vector concentrates on a trusted seed set
@@ -3225,7 +3299,7 @@ SELECT mx.grp AS event_type, mx.n_hours,
        round(CAST(mx.mx AS DOUBLE) / mx.n_hours, 4) AS peak_cusum,
        pk.h AS peak_hour
 FROM mx JOIN pk ON mx.grp = pk.grp AND pk.rn = 1
-""")
+""", must=["Window"], must_not=["BroadcastNestedLoopJoin"], headline=True)
 def events_cusum_peak(spark, sf_dir):
     """CUSUM change-point statistic (Page, Biometrika 1954): upper
     CUSUM S_t = max(0, S_{t−1} + (x_t − μ)) over each event type's
@@ -3270,7 +3344,7 @@ SELECT grp AS event_type, n_hours, s_stat, var18, z,
             WHEN z <= -1.96 THEN 'decreasing'
             ELSE 'none' END AS trend
 FROM z
-""")
+""", must_not=["Window", "BroadcastNestedLoopJoin"])
 def events_mann_kendall(spark, sf_dir):
     """Mann–Kendall trend test (Mann, Econometrica 1945): per event
     type over the hourly count series, S = Σ sgn(x_j − x_i) with the
@@ -3297,7 +3371,7 @@ SELECT n_keys, total,
              / CAST(n_keys * total AS DOUBLE), 6) AS gini,
        round(mx / CAST(total AS DOUBLE), 6) AS top_share
 FROM a
-""")
+""", must_not=["BroadcastNestedLoopJoin"])
 def events_load_gini(spark, sf_dir):
     """Per-entity crawl-load concentration — exact Gini coefficient
     (Gini 1912, rank formula G = (2·Σ i·x_i − (n+1)·Σx)/(n·Σx)) over
@@ -3323,7 +3397,9 @@ SELECT nr.r, nr.n_r,
        round(coalesce((nr.r + 1) * nx.n_r
                       / CAST(nr.n_r * tot.N AS DOUBLE), 0.0), 8) AS p_gt
 FROM nr LEFT JOIN nr nx ON nx.r = nr.r + 1, tot
-""")
+""",
+   # the single-row total rides a bounded broadcast
+   must_not=["Window"])
 def docs_good_turing(spark, sf_dir):
     """Good–Turing frequency estimation (Good 1953; Gale & Sampson
     1995 simple GT): the counts-of-counts table with adjusted counts
@@ -3367,7 +3443,7 @@ surv AS (SELECT lt, n_risk, d,
                   6) END AS survival
          FROM risk WHERE d > 0)
 SELECT lt AS t_hours, n_risk, d, survival FROM surv
-""")
+""", must=["Window"])
 def events_kaplan_meier(spark, sf_dir):
     """Kaplan–Meier survival (Kaplan & Meier, JASA 1958) over entity
     lifetimes in HOURS — the churn curve with right-censoring
@@ -3407,7 +3483,9 @@ num AS (SELECT a.grp, l.lag, CAST(sum(a.ct * b.ct) AS BIGINT) AS num
 SELECT n.grp AS event_type, CAST(n.lag AS BIGINT) AS lag, d.n_hours,
        round(n.num / CAST(d.den AS DOUBLE), 6) AS acf
 FROM num n JOIN den d USING (grp)
-""")
+""",
+   # the lag list rides a bounded 6-row broadcast
+   must_not=["Window"])
 def events_hourly_acf(spark, sf_dir):
     """Autocorrelation of the hourly count series (Box–Jenkins ACF,
     the seasonality detector — a daily-periodic stream spikes at lag
@@ -3459,7 +3537,9 @@ SELECT n_a_exact, n_b_exact, inter_exact,
        ea AS est_a, eb AS est_b, eu AS est_union,
        round(ea + eb - eu, 4) AS est_inter
 FROM ex, flat
-""")
+""",
+   # side/estimate combines are bounded 1-3-row broadcasts
+   must_not=["Window"])
 def events_audience_overlap_hll(spark, sf_dir):
     """HLL sketch algebra (Flajolet et al. 2007 §4 — MERGEABILITY is
     the sketch's point): audience overlap of the view and purchase
@@ -3485,7 +3565,7 @@ rm AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS nr
 SELECT c.from_type, c.to_type, c.n,
        round(c.n / CAST(r.nr AS DOUBLE), 6) AS p
 FROM cnt c JOIN rm r USING (from_type)
-""")
+""", must=["Window"], must_not=["BroadcastNestedLoopJoin"])
 def events_markov_transitions(spark, sf_dir):
     """First-order Markov transition matrix of the event stream — the
     user-journey/crawl-session chain (the model underlying PageRank,
@@ -3544,7 +3624,9 @@ SELECT n_nodes, c AS concordant, d AS discordant,
        round((c - d) / sqrt(CAST(n0 - ta AS DOUBLE)
                             * CAST(n0 - tb AS DOUBLE)), 4) AS tau_b
 FROM agg, nj
-""")
+""",
+   # the CartesianProduct is the u<v node-pair join over the policy table
+   must=["CartesianProduct"], must_not=["Window"])
 def graph_rank_tau(spark, sf_dir):
     """Kendall τ-b rank agreement (Kendall 1938, tie-corrected) between
     the 3-round PageRank and plain IN-DEGREE ranking of the supplier
@@ -3589,7 +3671,9 @@ SELECT t AS term, df, gamma_bits,
        round(gamma_bits / CAST(df AS DOUBLE), 4) AS bits_per_posting,
        round(gamma_bits / CAST(64 * df AS DOUBLE), 4) AS ratio_vs_64bit
 FROM agg
-""")
+""",
+   # the Window is the per-term LAG over posting lists
+   must=["Window"], must_not=["Join"])
 def docs_posting_gamma_bits(spark, sf_dir):
     """Inverted-index compression planning with Elias γ-codes (Elias
     1975; Witten-Moffat-Bell gap compression): per-term delta-encoded
@@ -3623,7 +3707,9 @@ SELECT s AS source, CAST(max(n_s) AS BIGINT) AS n_tokens,
        CAST(max(vocab) AS BIGINT) AS vocab,
        round(CAST(sum(k9) AS DOUBLE) / 1e9, 4) AS kl
 FROM t9 GROUP BY s
-""")
+""",
+   # the 1-row total is a bounded broadcast
+   must_not=["Window"])
 def docs_source_kl(spark, sf_dir):
     """Per-source unigram KL divergence from the corpus mixture
     (Kullback & Leibler 1951) — the drift/mixture diagnostic behind
@@ -3648,7 +3734,9 @@ SELECT pr.i AS ant, pr.j AS cons, pr.n_ab,
        round((pr.n_ab / CAST(pa.ni AS DOUBLE))
              / (pb.ni / CAST(n.n AS DOUBLE)), 6) AS lift
 FROM pr JOIN pi pa ON pa.i = pr.i JOIN pi pb ON pb.i = pr.j, n
-""")
+""",
+   # the 1-row total is a bounded broadcast
+   must_not=["Window"])
 def events_assoc_rules(spark, sf_dir):
     """Single-item association rules (Agrawal, Imieliński & Swami,
     SIGMOD 1993) over per-entity event-type itemsets: every ordered
@@ -3660,7 +3748,7 @@ def events_assoc_rules(spark, sf_dir):
 
 
 @q("events_ab_ztest", """
-WITH per AS (SELECT user_id % 2 AS v,
+WITH per AS (SELECT abs(user_id % 2) AS v,
                     CAST(max(CASE WHEN event_type = 'purchase' THEN 1
                              ELSE 0 END) AS BIGINT) AS conv
              FROM events GROUP BY user_id),
@@ -3683,7 +3771,9 @@ SELECT n_a, conv_a, n_b, conv_b,
        (abs(round(CASE WHEN se > 0 THEN (p1 - p2) / se
                        ELSE 0.0 END, 4)) >= 1.96) AS significant
 FROM z
-""")
+""",
+   # the cross join is the bounded 2x1-row combine
+   must_not=["Window", "SortMergeJoin"])
 def events_ab_ztest(spark, sf_dir):
     """Two-proportion z-test (Fleiss, Levin & Paik) — the
     experimentation primitive for crawl/ranking policy changes:
@@ -3712,7 +3802,7 @@ SELECT w AS term, cf, df, df2,
        round(cf / CAST(df AS DOUBLE), 4) AS burst,
        round(df2 / CAST(df AS DOUBLE), 4) AS p2
 FROM t WHERE cf >= 10
-""")
+""", must=["HashAggregate"], must_not=["Join", "Window"])
 def docs_term_burstiness(spark, sf_dir):
     """Term burstiness / adaptation (Church & Gale 1995 Poisson
     mixtures; Church 2000 "two Noriegas"): per-term collection vs
@@ -3741,7 +3831,9 @@ SELECT stage_idx, stage, users,
        round(CAST(users AS DOUBLE)
              / (SELECT users FROM n WHERE stage_idx = 1), 4) AS conversion
 FROM n
-""")
+""",
+   # the one BroadcastNestedLoopJoin is the 1-row stage-1-count broadcast
+   must=["PushedFilters"], must_not=["Window"])
 def events_funnel(spark, sf_dir):
     """Ordered funnel (view → click → purchase, the windowFunnel /
     Amplitude product-analytics operator): a user reaches stage i only
@@ -3767,7 +3859,7 @@ sz AS (SELECT cohort_date, users AS size FROM cells WHERE week_offset = 0)
 SELECT c.cohort_date, c.week_offset, c.users,
        round(CAST(c.users AS DOUBLE) / sz.size, 4) AS retention
 FROM cells c JOIN sz USING (cohort_date)
-""")
+""", must=["HashAggregate"], must_not=["Window", "BroadcastNestedLoopJoin"])
 def events_retention_cohorts(spark, sf_dir):
     """Weekly retention cohorts (the growth-analytics triangle):
     cohort = date of a user's first event; retained in week k if any
@@ -3807,7 +3899,7 @@ SELECT id, url,
   array_to_string(list_reverse(string_split(hostname, '.'))[1:2], ',')
     AS domain_key
 FROM hp
-""")
+""", must_not=["Exchange", "Window", "Join"])
 def frontier_surt_keys(spark, sf_dir):
     """SURT canonicalization (Heritrix / Internet Archive — the key
     form of CDX indexes and SurtPrefixScope crawl scoping): lowercase,
@@ -3864,7 +3956,7 @@ nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed)
 SELECT n.node, COALESCE(a2.a8, 0) AS auth8, COALESCE(h2.h8, 0) AS hub8
 FROM nodes n LEFT JOIN a2 ON n.node = a2.dst
              LEFT JOIN h2 ON n.node = h2.src
-""")
+""", must_not=["Window", "BroadcastNestedLoopJoin"])
 def graph_salsa(spark, sf_dir):
     """SALSA (Lempel & Moran WWW 2000 — the Who-To-Follow ranking):
     HITS's mutual reinforcement replaced by a random walk splitting
@@ -3891,7 +3983,7 @@ SELECT l.event_id, l.user_id, l.ts,
 FROM (SELECT * FROM events WHERE event_type = 'click') l
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') r
   ON l.user_id = r.user_id AND l.ts >= r.ts
-""")
+""", must=["Window"], must_not=["BroadcastNestedLoopJoin", "SortMergeJoin"])
 def events_asof_last_signup(spark, sf_dir):
     """As-of join (time-series enrichment): every click event picks the
     user's most recent signup event at-or-before its timestamp
@@ -3916,7 +4008,7 @@ JOIN orders o ON l.l_orderkey = o.o_orderkey
 JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY ROLLUP (n.n_name, c.c_mktsegment)
-""")
+""", must=["Expand", "BroadcastHashJoin"])
 def revenue_rollup(spark, sf_dir):
     """Hierarchical grouping-sets aggregation (ROLLUP nation →
     segment → grand total): Spark `rollup` with broadcast dim joins —
@@ -3943,7 +4035,7 @@ SELECT CAST(dayofweek(ts) AS BIGINT) AS dow,
        CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
        CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view
 FROM events GROUP BY 1
-""")
+""", must=["HashAggregate"], must_not=["Exchange hashpartitioning(event_type"])
 def events_weekday_pivot(spark, sf_dir):
     """PIVOT: event counts per weekday × type (Spark `pivot` with an
     explicit value list so the plan is a single pass, no distinct-values
@@ -3981,7 +4073,7 @@ SELECT event_type,
        round(quantile_disc(value, 0.9), 6) AS p90,
        round(quantile_disc(value, 0.99), 6) AS p99
 FROM events GROUP BY event_type
-""")
+""", must=["HashAggregate"], must_not=["Sort", "Window"])
 def events_value_quantiles_approx(spark, sf_dir):
     """The 100 TB form of events_value_quantiles: `percentile_approx`
     (Greenwald-Khanna sketch — mergeable, bounded memory per group, the
@@ -4009,7 +4101,7 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
   ON epoch_us(c.ts) >= epoch_us(s.ts)
  AND epoch_us(c.ts) < epoch_us(s.ts) + 3600000000
 GROUP BY s.event_id
-""")
+""", must_not=["BroadcastNestedLoopJoin"])
 def signup_click_window_counts(spark, sf_dir):
     """Range/interval join: clicks falling in each signup's 1-hour
     window, counted per signup (operators/relational.py
@@ -4110,7 +4202,9 @@ SELECT t.doc_id, CAST(len(t.tk) AS BIGINT) AS n_tokens,
 FROM toks t
 LEFT JOIN covc cc USING (doc_id)
 LEFT JOIN kept kp USING (doc_id)
-""")
+""",
+   # never a window over the hot fingerprint key
+   must_not=["Window"], headline=True)
 def docs_substring_dedup(spark, sf_dir):
     """Exact substring dedup (Lee et al. 2022 ExactSubstr, fingerprint-
     window distributed form): every 20-token run seen elsewhere in the
@@ -4131,7 +4225,7 @@ FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id, qb
 WHERE e.vec_id <> 0 AND b.bucket IN
   (qb.qbucket, {", ".join(f"xor(qb.qbucket, {1 << p}::BIGINT)" for p in range(8))})
 ORDER BY sim DESC, e.vec_id ASC LIMIT 10
-""")
+""", must=["TakeOrderedAndProject"], must_not=["Window"])
 def emb_ann_topk_multiprobe_of_vec0(spark, sf_dir):
     """Multi-probe LSH ANN (Lv et al. 2007): the query bucket plus all
     Hamming-distance-1 buckets (one sign flip per plane) feed the exact
@@ -4190,7 +4284,9 @@ SELECT doc_id, lang, bits_per_token,
             WHEN b4 <= q[2] THEN 'middle'
             ELSE 'tail' END AS bucket
 FROM sc JOIN cuts USING (lang)
-""")
+""",
+   # the single-row totals broadcast rides a bounded BroadcastNestedLoopJoin
+   must_not=["Window"])
 def docs_ccnet_buckets(spark, sf_dir):
     """CCNet head/middle/tail LM-quality terciles per language (Wenzek
     et al. 2020): integerized bits-per-token cut at per-lang exact
@@ -4224,7 +4320,7 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
        (sum(lam6) > 0) AS target_like
 FROM b JOIN lam USING (bucket)
 GROUP BY doc_id
-""")
+""", must_not=["Window"], headline=True)
 def docs_dsir_weights(spark, sf_dir):
     """DSIR hashed-bigram importance weights (Xie et al. 2023), target =
     the lang='en' slice: one bucket-keyed agg builds raw+target
@@ -4258,7 +4354,9 @@ SELECT id_a, id_b,
 FROM dots JOIN nrm na ON na.doc_id = id_a JOIN nrm nb ON nb.doc_id = id_b
 WHERE CAST(dot AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE))
                              * sqrt(CAST(nb.n2 AS DOUBLE))) >= 0.5
-""")
+""",
+   # the one BroadcastNestedLoopJoin is the 1-row corpus-size broadcast
+   must_not=["Window"])
 def docs_tfidf_cosine_pairs(spark, sf_dir):
     """Inverted-index all-pairs similarity (Elsayed et al. 2008): tf-idf
     bigram cosine >= 0.5 via term-keyed partial dot products with a 2%
@@ -4304,7 +4402,7 @@ SELECT id, url, sig.host, digit_frac, banned_hits,
        (bl.host IS NULL AND banned_hits = 0 AND digit_frac <= 0.5)
          AS allowed
 FROM sig LEFT JOIN bl ON sig.host = bl.host
-""")
+""", must=["BroadcastHashJoin"], must_not=["Window", "SortMergeJoin"])
 def frontier_url_filter(spark, sf_dir):
     """URL-level corpus triage (RefinedWeb-style): host blocklist
     (broadcast), banned-word hits, digit-dominated-path fraction ->
@@ -4351,7 +4449,8 @@ agg AS (SELECT url, CAST(count(*) AS BIGINT) AS n_obs,
                CAST(sum(CASE WHEN ch THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_changes,
                min(us) AS f, max(us) AS l
-        FROM hist GROUP BY url HAVING count(*) >= 2),
+        FROM hist GROUP BY url HAVING count(*) >= 2
+          AND max(us) > min(us)),
 sc AS (SELECT url,
         -ln(((CAST(n_obs AS DOUBLE) - CAST(n_changes AS DOUBLE)) + 0.5)
             / (CAST(n_obs AS DOUBLE) + 0.5))
@@ -4369,7 +4468,7 @@ frontier AS (SELECT DISTINCT url FROM hist
              FROM generate_series(0, 49) s(i))
 SELECT f.url, coalesce(p.p, 0) AS priority
 FROM frontier f LEFT JOIN pri p USING (url)
-""")
+""", must_not=["Window", "BroadcastNestedLoopJoin"], headline=True)
 def frontier_freshness_priority(spark, sf_dir):
     """End-to-end frontier freshness prioritization (Cho &
     Garcia-Molina 2003; VERDICT r4 Next-round #8): the full
@@ -4419,7 +4518,7 @@ SELECT id, url, CAST(len(url) AS BIGINT) AS url_len,
         OR (fam = 2 AND 1 + id % 12 > 8)
         OR (fam = 0 AND 1 + id % 7 >= 3)) AS is_trap
 FROM urls
-""")
+""", must_not=["Window", "Exchange", "Join"], headline=True)
 def frontier_trap_filter(spark, sf_dir):
     """Spider-trap triage end-to-end (Heritrix pathological-path /
     too-many-path-segments family; VERDICT r4 Next-round #8): a
@@ -4514,7 +4613,9 @@ SELECT u.id, u.url, u.host,
        END AS rep_kind,
        (m.rep_rank IS NULL OR m.rep_rank % 2 = 1) AS allowed
 FROM urls2 u LEFT JOIN m ON u.id = m.id
-""")
+""",
+   must=["BroadcastHashJoin"],
+   must_not=["Window", "BroadcastNestedLoopJoin", "SortMergeJoin"])
 def frontier_robots_rep(spark, sf_dir):
     """Full RFC 9309 robots-rule evaluation over a deterministic 4000-URL
     frontier (the frontier_url_filter fixture formula): ``Allow:``
@@ -4618,7 +4719,9 @@ SELECT vec_id, array_to_string(list(cid ORDER BY sub), '-') AS codes,
        CAST(sum(CAST(round(d * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
          AS recon_err
 FROM a2 GROUP BY vec_id
-""")
+""",
+   # the codebook ride-along is a bounded broadcast
+   must_not=["Window"])
 def emb_pq_codes(spark, sf_dir):
     """Product quantization (Jégou et al. 2011): 4 subspaces x 16
     codewords over the 64-dim embeddings, grouped deterministic Lloyd's
@@ -4715,7 +4818,7 @@ FROM a2 JOIN qd ON qd.sub = a2.sub AND qd.cid = a2.cid
 WHERE a2.vec_id <> 0
 GROUP BY a2.vec_id
 ORDER BY adist ASC, vec_id ASC LIMIT 10
-""")
+""", must=["TakeOrderedAndProject"], must_not=["Window"])
 def emb_pq_adc_topk(spark, sf_dir):
     """Asymmetric distance computation over PQ codes (Jegou et al. 2011
     SIV, the FAISS ADC query path): one broadcast m*k distance table +
@@ -4750,7 +4853,7 @@ ex AS (SELECT user_id, CAST(count(*) AS BIGINT) AS exact_cnt
 SELECT user_id, exact_cnt, CAST(cms_est AS BIGINT) AS cms_est
 FROM est JOIN ex USING (user_id)
 WHERE cms_est >= 80
-""")
+""", must=["BroadcastHashJoin"], must_not=["Window"])
 def events_heavy_hitters_cms(spark, sf_dir):
     """Count-Min heavy hitters (Cormode & Muthukrishnan 2005): a 4x1024
     counter sketch over event user_ids — bounded memory regardless of
@@ -4792,7 +4895,9 @@ SELECT CAST(n AS BIGINT) AS vocab_size, total_tokens,
        CAST(n * sxy - sx * sy AS DOUBLE)
          / CAST(n * sxx - sx * sx AS DOUBLE) AS zipf_slope
 FROM a, top
-""")
+""",
+   # one deliberate global window, over the vocabulary (sublinear)
+   must=["HashAggregate"])
 def docs_zipf_stats(spark, sf_dir):
     """Corpus Zipf fit: OLS slope of ln(freq) on ln(rank) over the
     vocabulary — exact DECIMAL/HUGEINT integer sums, one final division
@@ -4827,7 +4932,8 @@ SELECT event_type, CAST(nd AS BIGINT) AS exact_distinct,
              THEN 1024.0 * ln(1024.0 / CAST(v AS DOUBLE)) ELSE raw END, 4)
          AS hll_estimate
 FROM est
-""")
+""",
+   must=["HashAggregate"], must_not=["Window", "SortMergeJoin"], headline=True)
 def events_distinct_users_hll(spark, sf_dir):
     """HyperLogLog distinct-count sketch per event type (Flajolet et
     al. 2007) — the production 10^10-key distinct sketch beside the
@@ -4866,7 +4972,9 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_hit,
        round(CAST(sum(micro) AS DOUBLE) / 1000000.0, 4) AS score
 FROM sc GROUP BY doc_id
 ORDER BY score DESC, doc_id ASC LIMIT 20
-""")
+""",
+   must=["TakeOrderedAndProject", "BroadcastHashJoin"], must_not=["Window"],
+   headline=True)
 def docs_bm25_topk(spark, sf_dir):
     """BM25 ranked retrieval (Robertson & Walker 1994, Lucene +1 idf)
     for a fixed 4-term query, no inverted index: the token explode is
@@ -4916,7 +5024,9 @@ h2 AS (SELECT n.node, CASE WHEN r.r IS NULL THEN 0::BIGINT
 SELECT a2.node, CAST(a2.s8 AS DOUBLE) / 1e8 AS auth,
        CAST(h2.s8 AS DOUBLE) / 1e8 AS hub
 FROM a2 JOIN h2 USING (node)
-""")
+""",
+   # the top-level auth-hub join is SMJ statically; AQE re-plans it
+   must_not=["Window", "BroadcastNestedLoopJoin"], headline=True)
 def graph_hits(spark, sf_dir):
     """HITS hubs & authorities (Kleinberg 1999, 2 rounds, L1-normalized)
     over the same customer→supplier purchase graph as graph_pagerank —
@@ -4943,7 +5053,8 @@ agg AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_obs,
                CAST(sum(CASE WHEN ch THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_changes,
                min(us) AS f, max(us) AS l
-        FROM obs GROUP BY user_id HAVING count(*) >= 2),
+        FROM obs GROUP BY user_id HAVING count(*) >= 2
+          AND max(us) > min(us)),
 sc AS (SELECT user_id, n_obs, n_changes,
         -ln(((CAST(n_obs AS DOUBLE) - CAST(n_changes AS DOUBLE)) + 0.5)
             / (CAST(n_obs AS DOUBLE) + 0.5))
@@ -4955,7 +5066,9 @@ SELECT user_id, n_obs, n_changes,
        round(lam, 4) AS lambda_per_day,
        round(1.0 - exp(-(lam * age)), 4) AS staleness
 FROM sc
-""")
+""",
+   must=["HashAggregate"],
+   must_not=["Window", "SortMergeJoin", "BroadcastHashJoin"], headline=True)
 def events_recrawl_priority(spark, sf_dir):
     """Freshness-driven recrawl priority (Cho & Garcia-Molina 2003):
     per-entity Poisson change-rate λ̂ from revisit observations with the
@@ -5024,7 +5137,9 @@ tot AS (SELECT CAST(sum(h3.h8 + c3.c8) AS DOUBLE) AS tot
 SELECT h3.node, h3.h8 AS history8, c3.c8 AS cash8,
        round(CAST(h3.h8 + c3.c8 AS DOUBLE) / tot.tot, 8) AS importance
 FROM h3 JOIN c3 ON h3.node = c3.node CROSS JOIN tot
-""")
+""",
+   # per-round 1-row broadcasts compile to BroadcastNestedLoopJoin
+   must_not=["Window"], headline=True)
 def graph_opic(spark, sf_dir):
     """OPIC on-line page importance (Abiteboul, Preda & Cobéna, WWW
     2003, 3 synchronous rounds) over the same customer→supplier
@@ -5110,7 +5225,7 @@ def _reorder_registry() -> None:
     if missing:  # fail loudly if a rename desyncs the gate list
         raise RuntimeError(f"_GATE_FIRST names not registered: {missing}")
     order = _GATE_FIRST + [n for n in QUERY_BUILDERS if n not in set(_GATE_FIRST)]
-    for d in (QUERY_BUILDERS, ORACLES):
+    for d in (QUERY_BUILDERS, ORACLES, PLAN_CHECKS):
         tail = {n: d[n] for n in order if n in d}
         d.clear()
         d.update(tail)

@@ -5,6 +5,7 @@ import datetime as dt
 import math
 
 from pink_spider_spark.crawl import freshness as FR
+from tests.spark_fixtures import spark_vs_oracle
 
 US_DAY = 86_400_000_000
 
@@ -74,3 +75,23 @@ def test_with_freshness_priority_join_contract(spark):
     expected = int((1.0 - math.exp(-(lam * 2.0))) * 1_000_000)
     assert got["http://a/x"] == expected
     assert got["http://new/never-seen"] == 0  # no history -> discovery rank
+
+
+def test_zero_span_key_matches_oracle(spark, tmp_path):
+    # user 1's observations all share one timestamp: the unguarded
+    # λ̂ = x / 0 fails the Spark job (ANSI DIVIDE_BY_ZERO) and is NULL or
+    # inf/NaN in DuckDB; both engines drop the key, so it keeps priority 0
+    events = ("SELECT u AS user_id, t AS ts, e AS event_type FROM (VALUES "
+              "(1, TIMESTAMP '2024-01-01', 'view'), "
+              "(1, TIMESTAMP '2024-01-01', 'click'), "
+              "(1, TIMESTAMP '2024-01-01', 'click'), "
+              "(2, TIMESTAMP '2024-01-01', 'view'), "
+              "(2, TIMESTAMP '2024-01-03', 'click')) v(u, t, e)")
+    rows = {}
+    for name in ("frontier_freshness_priority", "events_recrawl_priority"):
+        got, want = spark_vs_oracle(spark, tmp_path, name, events)
+        assert got == want
+        rows[name] = got
+    assert ("https://u1.example/feed", 0) in rows[
+        "frontier_freshness_priority"]
+    assert [r[0] for r in rows["events_recrawl_priority"]] == [2]

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from pink_spider_spark.functions import text as X
 from pink_spider_spark.operators import relational as R
+from tests.spark_fixtures import spark_vs_oracle
 
 
 @pytest.fixture(scope="module")
@@ -851,6 +852,18 @@ def test_ab_ztest_no_difference_not_significant(spark):
     (r,) = R.ab_ztest(df).collect()
     assert r.rate_a == r.rate_b == 0.5
     assert r.z == 0.0 and r.significant is False
+
+
+def test_ab_ztest_negative_ids_match_oracle(spark, tmp_path):
+    # odd negative ids: pmod gives 1 but DuckDB's % gives -1, which the
+    # oracle's 2-variant combine dropped; abs(id % 2) buckets both alike
+    got, want = spark_vs_oracle(
+        spark, tmp_path, "events_ab_ztest",
+        "SELECT u AS user_id, CASE WHEN u % 3 = 0 THEN 'purchase' "
+        "ELSE 'view' END AS event_type, TIMESTAMP '2024-03-01' AS ts "
+        "FROM range(-7, 7) t(u)")
+    assert got == want
+    assert got[0][0] + got[0][2] == 14  # n_a + n_b: every id bucketed
 
 
 # ------------------------------------------------- association rules
