@@ -202,9 +202,12 @@ def update_bloom_shards(shards: DataFrame, new_keys: DataFrame,
     delta touches at most |delta| shards, so at the 10^10 design point
     (4096 shards × ~3 MB bitmaps) a small wave no longer round-trips
     ~12 GB of untouched bitmaps through Arrow/pandas; it serializes only
-    what it writes.  The delta is pinned (lazy localCheckpoint) so its
-    two consumers — the touched-id set and the cogroup — read one
-    materialization inside the consuming job.  Keys landing in a shard
+    what it writes.  The delta is pinned (localCheckpoint) so its two
+    consumers — the touched-id set and the cogroup — read one
+    materialization.  That happens when the caller pins the returned
+    frame, not in a later consumer: under AQE,
+    ``localCheckpoint(eager=False)`` runs a plan's shuffle stages at once
+    (see ``CrawlDriver._bloom_shards_for_wave``).  Keys landing in a shard
     with no row yet would error; the caller guarantees the build covered
     every shard id (``cover_all_shards``)."""
     from ..functions.udfs import ensure_package_shipped
@@ -292,12 +295,13 @@ def prune_with_bloom_shards(candidates: DataFrame, seen: DataFrame,
             left[hash_col].to_numpy(dtype=np.int64))
         return out
 
-    # pin with a LAZY localCheckpoint instead of an eager cache+count
-    # (r5): the two consumers (fresh + suspects) are branches of one
-    # downstream union, so the blocks materialize inside that single
-    # consuming job — the old count() was a whole extra job on the
-    # frontier write's critical path.  Checkpoint also truncates lineage,
-    # so the cogroup can never recompute per branch.
+    # pin with localCheckpoint(eager=False) instead of cache+count (r5).
+    # Under AQE the declaration still runs the cogroup's shuffle stages at
+    # once, on the calling thread; only the probe stage and the block
+    # write wait for the consuming job, where the two consumers (fresh +
+    # suspects, branches of one downstream union) share them — no
+    # separate count() job.  Checkpoint also truncates lineage, so the
+    # cogroup can never recompute per branch.
     flagged = (candidates
                .withColumn("__shard", _shard_col(hash_col, n_shards))
                .groupBy("__shard")

@@ -227,13 +227,16 @@ class CrawlDriver:
     def _bloom_shards_for_wave(self, frontier, wave: int,
                                known_estimate: int):
         """Sharded-regime twin of ``_bloom_for_wave``: the shard table is
-        pinned with a (lazy) localCheckpoint and kept across waves; each
+        pinned with a localCheckpoint and kept across waves; each
         wave cogroup-ORs in only the frontier delta
         (``update_bloom_shards``), so the per-wave cost is
         O(delta + n_shards bitmaps) instead of a full frontier regroup.
-        The checkpoint stays LAZY — it materializes inside the first
-        consumer (the enqueue prune job), off the wave's serial path,
-        exactly where the old full rebuild ran.  Same invalidation
+        ``localCheckpoint(eager=False)`` is NOT lazy here: under the
+        session's AQE, declaring it runs the plan's shuffle stages (the
+        build's groupBy, the update's cogroup) at once, on this thread —
+        the wave's serial path, before the dequeue's ``batch.count()``.
+        Only the post-shuffle stage and the block write wait for the
+        first consumer (the enqueue prune job).  Same invalidation
         triggers as the broadcast form (fresh driver, recrawl, capacity
         outgrown -> full rebuild, sized 4x and covering every shard id so
         incremental updates never miss a shard row)."""
@@ -553,22 +556,20 @@ class CrawlDriver:
             src = batch
             if n_recrawl:
                 src = batch.filter(F.col("status") != "recrawl")
-            seen_new = (
-                scheduler.wave_order(
-                    src,
-                    distributed_threshold=self.config.wave_order_threshold,
-                    # the batch count is already known (the dequeue's one
-                    # materializing job) — skip wave_order's own count;
-                    # a live recrawl changes the row set, so only then is
-                    # the count re-derived inside wave_order
-                    n_rows=None if n_recrawl else batch_n).select(
-                    "url",
-                    F.lit(wave).alias("first_wave"),
-                    (F.lit(seen_count) + F.col("wave_pos")).cast("long")
-                    .alias("seq"))
-            )
-            return with_url_hash(seen_new).select(
-                [f.name for f in schemas.SEEN_SCHEMA.fields])
+            # the frontier's url_hash is the seen key of the same url:
+            # carried over, not recomputed through the canonicalize UDF
+            return scheduler.wave_order(
+                src,
+                distributed_threshold=self.config.wave_order_threshold,
+                # the batch count is already known (the dequeue's one
+                # materializing job) — skip wave_order's own count;
+                # a live recrawl changes the row set, so only then is
+                # the count re-derived inside wave_order
+                n_rows=None if n_recrawl else batch_n).select(
+                "url", "url_hash",
+                F.lit(wave).alias("first_wave"),
+                (F.lit(seen_count) + F.col("wave_pos")).cast("long")
+                .alias("seq"))
 
         # --- per-partition lineage metrics: one row per partition from a
         # doc-keyed aggregation over the (column-pruned) entries delta —

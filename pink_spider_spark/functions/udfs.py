@@ -154,14 +154,18 @@ def extract_pages(df: DataFrame, catalog_items: dict | None = None,
 
 
 def _canon_one(url: str) -> str:
-    """Lowercase scheme+host, strip default port and fragment, '' path -> '/'."""
+    """Lowercase scheme+host, strip default port and fragment, '' path -> '/'.
+    A URL ``urlsplit`` rejects (bad port, unbalanced brackets) is returned
+    unchanged; a bracketed host (IPv6 literal) keeps its brackets."""
     try:
         parts = urlsplit(url)
+        port = parts.port
     except ValueError:
         return url
     scheme = parts.scheme.lower()
     host = (parts.hostname or "").lower()
-    port = parts.port
+    if parts.netloc.rpartition("@")[2].startswith("["):
+        host = f"[{host}]"
     if port is not None and not ((scheme == "http" and port == 80)
                                  or (scheme == "https" and port == 443)):
         host = f"{host}:{port}"

@@ -42,10 +42,37 @@ extraction pipeline):
   forms are not byte-preserved) — invisible to extraction, which never
   reads script data.  EOF in an incomplete construct is repaired to the
   spec tokenizer's output (see ``close``).
+
+Speed: one tokenizer loop and an in-body fast path (output is
+byte-identical to the plain algorithm; ``tests/test_parser_digest.py``
+pins it):
+- ``_TreeBuilder.goahead`` replaces the stdlib's loop.  A text run ends
+  at the next ``<`` as in the stdlib.  At a ``<`` in the data state one
+  compiled regex, ``_TAG``, takes an end tag or a start tag whose
+  attributes are quoted, unquoted or valueless (names lowercased, the
+  first duplicate wins, character references in values decoded as the
+  stdlib does) and calls the callbacks directly.  The stdlib's own
+  methods take everything else in the same loop: comments,
+  declarations, ``<?``, a stray ``<``, a start tag ``_TAG`` does not
+  match, rawtext/RCDATA/script content (cdata mode), and a construct cut
+  off at the end of the input (``close`` repairs it).
+- the callbacks skip the insertion-mode machine when the mode is "in
+  body", the list of active formatting elements is empty, foster
+  parenting and pending table text are off, no newline skip is pending
+  (after ``<pre>``/``<listing>``/``<textarea>``) and the current node is
+  an HTML element.  Then a ``BLOCK_START`` tag closes a ``<p>`` in button
+  scope and is appended, an end tag naming the current node pops it
+  (not body/br/form/html/template, which do more), and text outside
+  rawtext merges into or follows the current node's last child.  Every
+  other token runs the full algorithm, and ``finish`` walks the tree to
+  detach template contents only if a ``<template>`` was inserted.
+- ``parse_html`` holds the cyclic garbage collector off while the tree
+  is built (and restores its previous state).
 """
 
 from __future__ import annotations
 
+import gc
 import re
 from html import unescape
 from html.parser import HTMLParser
@@ -105,6 +132,16 @@ IMPLIED_END = frozenset({"dd", "dt", "li", "optgroup", "option", "p",
                          "rb", "rp", "rt", "rtc"})
 
 HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
+
+# in-body start tags that only close a <p> in button scope and insert
+BLOCK_START = frozenset({
+    "address", "article", "aside", "blockquote", "center", "details",
+    "dialog", "dir", "div", "dl", "fieldset", "figcaption", "figure",
+    "footer", "header", "hgroup", "main", "menu", "nav", "ol", "p",
+    "section", "summary", "ul",
+})
+# in-body end tags that do more than pop a matching current node
+_END_NOT_POP = frozenset({"body", "br", "form", "html", "template"})
 TABLE_SECTIONS = frozenset({"tbody", "tfoot", "thead"})
 TABLE_CONTEXT = frozenset({"table", "tbody", "tfoot", "thead", "tr"})
 
@@ -205,15 +242,35 @@ def _dedupe_attrs(attrs) -> list:
 
 _NEVER = re.compile(r"(?!x)x")
 
+# The scanner's tag at a "<" in the data state: a start tag whose
+# attributes all take a common form (quoted, unquoted or no value), or
+# an end tag (the stdlib's ``endtagfind``).  Whitespace before an
+# attribute or the closing ">" must be HTML whitespace, a tag name stops
+# at \s, and an attribute name may not start with "=": where the
+# stdlib's ``\s`` and ``[^\t\n\r\f />\x00]`` classes would split the
+# tag differently, the match fails and ``parse_starttag`` takes the tag.
+_ATTR = (r"[ \t\n\r\f]++([^\s/>=][^\s/=>]*+)"
+         r"(?:[ \t\n\r\f]*+=++[ \t\n\r\f]*+"
+         r"""(?:"([^"]*+)"|'([^']*+)'|(?!['"])([^>\s]++)))?+""")
+_ATTRS = re.compile(_ATTR)
+# groups: tag name, attribute text, the last attribute's four groups,
+# "/" of "/>", end tag name
+_TAG = re.compile(
+    r"<([a-zA-Z][^\s/>\x00]*+)((?:" + _ATTR + r")*+)[ \t\n\r\f]*+(/?)>"
+    r"|</\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>")
+_STARTTAGOPEN = re.compile(r"<[a-zA-Z]")
+_CHARREF_END = re.compile(r"[\s;]")
+
 
 class _TreeBuilder(HTMLParser):
     """Tokenizer adapter + WHATWG tree constructor."""
 
+    # rawtext + RCDATA elements ride the stdlib cdata machinery
+    CDATA_CONTENT_ELEMENTS = (
+        (RAW_TEXT_ELEMENTS | RCDATA_ELEMENTS) - {"plaintext"})
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        # rawtext + RCDATA elements ride the stdlib cdata machinery
-        self.CDATA_CONTENT_ELEMENTS = tuple(
-            (RAW_TEXT_ELEMENTS | RCDATA_ELEMENTS) - {"plaintext"})
         self.document = Node(DOCUMENT)
         self.stack: list[Node] = []
         self.afe: list = []  # active formatting: _FmtEntry | MARKER
@@ -227,6 +284,7 @@ class _TreeBuilder(HTMLParser):
         self.skip_newline = False
         self.pending_table_text: list[str] = []
         self.templates: list[Node] = []
+        self.had_template = False  # finish() detaches template contents
         # §13.2.4.1 stack of template insertion modes (one entry per open
         # template; [-1] is "the current template insertion mode")
         self.template_modes: list[int] = []
@@ -238,9 +296,90 @@ class _TreeBuilder(HTMLParser):
         self._script_tail = ""
         self._cdata_reenter = False
 
-    def updatepos(self, i, j):
-        # the tokenizer's line/offset bookkeeping (getpos) is never read
-        return j
+    def goahead(self, end):
+        """The tokenizer loop, in place of ``HTMLParser.goahead``: CPython
+        3.11's loop with ``convert_charrefs`` on, plus ``_TAG`` at each
+        "<" in the data state (see the module docstring).  The ``&``
+        branches of the stdlib loop are unreachable with
+        ``convert_charrefs`` on and are left out."""
+        rawdata = self.rawdata
+        i, n = 0, len(rawdata)
+        tag_at = _TAG.match
+        while i < n:
+            if self.cdata_elem is None:
+                j = rawdata.find("<", i)
+                if j < 0:
+                    # a charref may be cut at the end of this chunk
+                    amp = rawdata.rfind("&", max(i, n - 34))
+                    if amp >= 0 and not _CHARREF_END.search(rawdata, amp):
+                        break
+                    j = n
+                if i < j:
+                    text = rawdata[i:j]
+                    self.handle_data(unescape(text) if "&" in text else text)
+                i = j
+                if i == n:
+                    break
+                m = tag_at(rawdata, i)
+                if m is not None:
+                    tag, attr_text, _, _, _, _, slash, end_tag = m.groups()
+                    i = m.end()
+                    if end_tag is not None:
+                        self.handle_endtag(end_tag.lower())
+                        continue
+                    tag = tag.lower()
+                    attrs = _dedupe_attrs(
+                        (name.lower(), unescape(dq or sq or bare))
+                        for name, dq, sq, bare in _ATTRS.findall(attr_text)
+                    ) if attr_text else []
+                    if slash:
+                        self.handle_startendtag(tag, attrs)
+                    else:
+                        self._start_tag(tag, attrs)
+                        if tag in self.CDATA_CONTENT_ELEMENTS:
+                            self.set_cdata_mode(tag)
+                    continue
+            else:
+                m = self.interesting.search(rawdata, i)
+                if m is None:
+                    break
+                j = m.start()
+                if i < j:
+                    self.handle_data(rawdata[i:j])
+                i = j
+            # rawdata[i] == "<"
+            if _STARTTAGOPEN.match(rawdata, i):
+                k = self.parse_starttag(i)
+            elif rawdata.startswith("</", i):
+                k = self.parse_endtag(i)
+            elif rawdata.startswith("<!--", i):
+                k = self.parse_comment(i)
+            elif rawdata.startswith("<?", i):
+                k = self.parse_pi(i)
+            elif rawdata.startswith("<!", i):
+                k = self.parse_html_declaration(i)
+            elif i + 1 < n:
+                self.handle_data("<")
+                k = i + 1
+            else:
+                break
+            if k < 0:
+                if not end:
+                    break
+                k = rawdata.find(">", i + 1)
+                if k < 0:
+                    k = rawdata.find("<", i + 1)
+                    if k < 0:
+                        k = i + 1
+                else:
+                    k += 1
+                self.handle_data(rawdata[i:k] if self.cdata_elem
+                                 else unescape(rawdata[i:k]))
+            i = k
+        if end and i < n and self.cdata_elem is None:
+            self.handle_data(unescape(rawdata[i:n]))
+            i = n
+        self.rawdata = rawdata[i:]
 
     # ================================================== tree helpers
     def current(self) -> Node:
@@ -327,20 +466,18 @@ class _TreeBuilder(HTMLParser):
     # scope checks -----------------------------------------------------
     def _in_scope(self, target, terminals=_SCOPE_BASE) -> bool:
         """target: tag name, set of tag names, or a specific Node."""
+        names = ((target,) if isinstance(target, str)
+                 else () if isinstance(target, Node) else target)
         for node in reversed(self.stack):
-            if isinstance(target, Node):
-                if node is target:
-                    return True
-            elif node.ns is None and (
-                    node.tag == target if isinstance(target, str)
-                    else node.tag in target):
+            if node is target:
                 return True
             if node.ns is None:
+                if node.tag in names:
+                    return True
                 if node.tag in terminals:
                     return False
-            elif node.ns == "math" and node.tag in SPECIAL_MATH:
-                return False
-            elif node.ns == "svg" and node.tag in SPECIAL_SVG:
+            elif node.tag in (SPECIAL_MATH if node.ns == "math"
+                              else SPECIAL_SVG):
                 return False
         return False
 
@@ -403,8 +540,32 @@ class _TreeBuilder(HTMLParser):
 
     # ================================================== token entry
     # (tokenizer callbacks dispatch into the mode machine)
+    def _plain_body(self) -> Node | None:
+        """The current node when the in-body fast path applies (see the
+        module docstring), else None."""
+        if (self.mode == IN_BODY and not self.afe and not self.foster
+                and not self.pending_table_text and not self.skip_newline):
+            cur = self.stack[-1]
+            if cur.ns is None:
+                return cur
+        return None
+
     def handle_starttag(self, tag, attrs):
-        self._start(tag, _dedupe_attrs(attrs), self_closing=False)
+        self._start_tag(tag, _dedupe_attrs(attrs))
+
+    def _start_tag(self, tag: str, attrs: list) -> None:
+        """A start tag with deduplicated attributes (not self-closing)."""
+        if tag in BLOCK_START:
+            cur = self._plain_body()
+            if cur is not None:
+                if self._in_scope("p", _SCOPE_BUTTON):
+                    self._close_p()
+                    cur = self.stack[-1]
+                node = Node(ELEMENT, tag, attrs)
+                cur.append(node)
+                self.stack.append(node)
+                return
+        self._start(tag, attrs, self_closing=False)
 
     def handle_startendtag(self, tag, attrs):
         self._start(tag, _dedupe_attrs(attrs), self_closing=True)
@@ -476,6 +637,11 @@ class _TreeBuilder(HTMLParser):
             self._script_esc = 1
             self._cdata_reenter = True
             return
+        if tag not in _END_NOT_POP:
+            cur = self._plain_body()
+            if cur is not None and cur.tag == tag:
+                self.stack.pop()
+                return
         self._end(tag)
 
     def handle_data(self, data):
@@ -501,7 +667,17 @@ class _TreeBuilder(HTMLParser):
             if self.cdata_elem == "script":
                 self._advance_script_escape(data)
             return
-        self._chars(data)
+        cur = self._plain_body()
+        if cur is None:
+            self._chars(data)
+            return
+        kids = cur.children
+        if kids and kids[-1].kind == TEXT:
+            kids[-1].text += data
+        else:
+            cur.append(Node(TEXT, text=data))
+        if self.frameset_ok and _WS_RE.search(data):
+            self.frameset_ok = False
 
     def handle_comment(self, data):
         self._flush_table_text()
@@ -841,6 +1017,7 @@ class _TreeBuilder(HTMLParser):
         if tag == "template":
             node = self._insert_element(tag, attrs)
             self.templates.append(node)
+            self.had_template = True
             self.afe.append(MARKER)
             self.frameset_ok = False
             # §13.2.6.4.4: switch to "in template" and push it onto the
@@ -880,11 +1057,7 @@ class _TreeBuilder(HTMLParser):
             self._insert_element("frameset", attrs)
             self.mode = IN_FRAMESET
             return
-        if tag in ("address", "article", "aside", "blockquote", "center",
-                   "details", "dialog", "dir", "div", "dl", "fieldset",
-                   "figcaption", "figure", "footer", "header", "hgroup",
-                   "main", "menu", "nav", "ol", "p", "section", "summary",
-                   "ul"):
+        if tag in BLOCK_START:
             if self._in_scope("p", _SCOPE_BUTTON):
                 self._close_p()
             self._insert_element(tag, attrs)
@@ -1817,7 +1990,8 @@ class _TreeBuilder(HTMLParser):
                         child.children = []
                     else:
                         strip_templates(child)
-        strip_templates(self.document)
+        if self.had_template:
+            strip_templates(self.document)
         return self.document
 
 
@@ -1831,7 +2005,16 @@ def parse_html(source) -> Node:
         source = source[1:]
     if "\r" in source:
         source = source.replace("\r\n", "\n").replace("\r", "\n")
-    builder = _TreeBuilder()
-    builder.feed(source)
-    builder.close()
-    return builder.finish()
+    # the cyclic GC would rescan the young, all-live tree over and over
+    # while it grows (a third of the parse time); the tree becomes
+    # garbage only after the caller is done with it
+    gc_was_on = gc.isenabled()
+    gc.disable()
+    try:
+        builder = _TreeBuilder()
+        builder.feed(source)
+        builder.close()
+        return builder.finish()
+    finally:
+        if gc_was_on:
+            gc.enable()

@@ -14,24 +14,27 @@ TAGS = ["div", "p", "a", "span", "iframe", "li", "ul", "img", "br", "meta",
         "em", "nobr", "textarea", "title", "noscript", "template", "svg",
         "math", "button", "pre", "dd", "dt", "dl"]
 
+# literal markup chunks: attributes, comments, entities, broken tags
+SNIPPETS = [
+    '<a href="https://www.youtube.com/watch?v=abc">x</a>',
+    '<iframe src="https://open.spotify.com/embed/track/t1"></iframe>',
+    '<meta property="og:title" content="T">',
+    "<!-- comment -->",
+    "<!DOCTYPE html>",
+    "<p", "href=", '"', "&amp;", "&notareal;", "\x00", "<><//>",
+    # script escape-state stressors (§13.2.5.22-29) and templates in
+    # table contexts — the two formerly-documented parser deviations
+    "<script><!--", "<!--", "-->", "<script><!--<script>",
+    "</script>", '<script><!-- x="</script>"; --></script>',
+    "<table><template><tr><td>t</td></tr></template>",
+    "<template><table><tr>", "</template>",
+]
+
 chunk = st.one_of(
     st.text(max_size=40),
     st.sampled_from([f"<{t}>" for t in TAGS]),
     st.sampled_from([f"</{t}>" for t in TAGS]),
-    st.sampled_from([
-        '<a href="https://www.youtube.com/watch?v=abc">x</a>',
-        '<iframe src="https://open.spotify.com/embed/track/t1"></iframe>',
-        '<meta property="og:title" content="T">',
-        "<!-- comment -->",
-        "<!DOCTYPE html>",
-        "<p", "href=", '"', "&amp;", "&notareal;", "\x00", "<><//>",
-        # script escape-state stressors (§13.2.5.22-29) and templates in
-        # table contexts — the two formerly-documented parser deviations
-        "<script><!--", "<!--", "-->", "<script><!--<script>",
-        "</script>", '<script><!-- x="</script>"; --></script>',
-        "<table><template><tr><td>t</td></tr></template>",
-        "<template><table><tr>", "</template>",
-    ]),
+    st.sampled_from(SNIPPETS),
 )
 
 

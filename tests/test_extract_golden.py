@@ -86,7 +86,15 @@ def test_canonicalize_url():
     assert _canon_one("http://a.b:80/x?q=1#f") == "http://a.b/x?q=1"
     assert _canon_one("https://a.b:8443/") == "https://a.b:8443/"
     assert _canon_one("https://a.b") == "https://a.b/"
+    # a port urlsplit rejects leaves the URL as it is; IPv6 hosts keep
+    # their brackets
+    assert _canon_one("http://h:xx/") == "http://h:xx/"
+    assert _canon_one("http://h:99999/") == "http://h:99999/"
+    assert _canon_one("HTTP://[::1]:8080/x#f") == "http://[::1]:8080/x"
+    assert _canon_one("http://[::1]:80") == "http://[::1]/"
     # idempotent
     for u in ("https://host1.example.net/p/2?x=%3A",
-              "http://a.b:8080/q?y=2"):
+              "http://a.b:8080/q?y=2", "http://h:xx/", "http://h:99999/",
+              "http://[::1]:8080/x", "https://[FE80::1]:443/y",
+              "http://[::1", "http://[::1]:xx/", "http://u@[::1]:81/"):
         assert _canon_one(_canon_one(u)) == _canon_one(u)

@@ -116,6 +116,58 @@ GOLDENS = [
     ("pure text", f"{B}pure text{E}"),
     ("", "<html><head></head><body></body></html>"),
     ("<input disabled>", f'{B}<input disabled="">{E}'),
+    # --- in-body fast path and tokenizer fallbacks (htmldom/parser.py):
+    # one golden per fast-path guard and tokenizer fallback, each sending
+    # a token down the full algorithm (or the stdlib tokenizer step)
+    # where skipping it would change the tree
+    # active formatting list non-empty: </b> runs the adoption agency
+    # (drops b from the list), text reconstructs a closed <b>, and a
+    # block start inside an open <a> is split by </a>
+    ("<b>x</b>y<p>z", f"{B}<b>x</b>y<p>z</p>{E}"),
+    ("<p><b>x</p>y", f"{B}<p><b>x</b></p><b>y</b>{E}"),
+    ('<a href="u">x<p>y</a>z',
+     f'{B}<a href="u">x</a><p><a href="u">y</a>z</p>{E}'),
+    # an open <p> in button scope is closed by a block start tag
+    ("<div><p>a<div>b</div>c</div>",
+     f"{B}<div><p>a</p><div>b</div>c</div>{E}"),
+    # in table: text and block tags are foster-parented before the table
+    ("<table>a<p>b</p>c</table>",
+     f"{B}a<p>b</p>c<table></table>{E}"),
+    # in template: contents are detached at the end of the parse
+    ("<div><template><p>x</p></template>y</div>",
+     f"{B}<div><template></template>y</div>{E}"),
+    # foreign current node: <p> breaks out of svg; <section> is an svg
+    # element, so a following <p> breaks out of it too
+    ("<svg><p>x</p>y", f"{B}<svg></svg><p>x</p>y{E}"),
+    ("<svg><section><p>x",
+     f"{B}<svg><section></section></svg><p>x</p>{E}"),
+    # in select: a block start tag is ignored, its text kept
+    ("<select><option>a<p>b</select>c",
+     f"{B}<select><option>ab</option></select>c{E}"),
+    # the newline right after <pre> is dropped
+    ("<div><pre>\nx</pre>y</div>",
+     f"{B}<div><pre>x</pre>y</div>{E}"),
+    # PLAINTEXT: everything after the start tag is text
+    ("<p>a<plaintext>b</p><div>c",
+     f"{B}<p>a</p><plaintext>b</p><div>c</plaintext>{E}"),
+    # tag and attribute names lowercased; the first duplicate wins
+    ('<DIV ID="a" id="b" Class=c>x</DIV>',
+     f'{B}<div id="a" class="c">x</div>{E}'),
+    # character references in attribute values and in text
+    ('<p title="a&amp;b" data-x=c&lt;d>x &amp; y&#33;</p>',
+     f'{B}<p title="a&amp;b" data-x="c<d">x &amp; y!</p>{E}'),
+    # attribute forms: unquoted (a trailing "/" is part of the value),
+    # single-quoted, valueless, spaced "="; "/>" on a non-void element is
+    # ignored
+    ("<p a=1 b='2' c d = \"4\" e=f/>x<div/>y",
+     f'{B}<p a="1" b="2" c="" d="4" e="f/">x</p>'
+     f"<div>y</div>{E}"),
+    # a "<" that starts no tag is text
+    ("<p>a < b, 1<2, <>x</p>",
+     f"{B}<p>a &lt; b, 1&lt;2, &lt;&gt;x</p>{E}"),
+    # an unterminated comment at EOF is a comment
+    ("<div>t</div><!--<p>u",
+     f"{B}<div>t</div><!--<p>u-->{E}"),
 ]
 
 
@@ -298,3 +350,19 @@ def test_eof_unterminated_comment_invisible_to_extract():
                       "https://x.example/trunc")
     assert "<script" not in product.text
     assert "plenty of visible words" in product.text
+
+
+def test_parse_restores_gc_state():
+    # parse_html holds the cyclic collector off while it builds the tree
+    # and leaves it as it found it
+    import gc
+
+    assert gc.isenabled()
+    parse_html("<p>x")
+    assert gc.isenabled()
+    gc.disable()
+    try:
+        parse_html("<p>x")
+        assert not gc.isenabled()
+    finally:
+        gc.enable()
