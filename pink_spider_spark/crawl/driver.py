@@ -461,8 +461,7 @@ class CrawlDriver:
                                 ("album", "albums")):
                 existing = self._pinned(table, schemas.ENCLOSURE_DIM_SCHEMA)
                 dim_appends[table] = entities.new_dim_rows(
-                    encl_dedup, existing, kind, self.catalog_df, wave,
-                    assume_deduped=True)
+                    encl_dedup, existing, kind, self.catalog_df, wave)
             playlist_tracks_new = entities.playlist_track_rows(
                 dim_appends["playlists"], self.catalog_df, wave)
             return dim_appends, playlist_tracks_new

@@ -35,19 +35,15 @@ def dedup_enclosures(enclosures: DataFrame) -> DataFrame:
             .drop("__rn"))
 
 
-def new_dim_rows(enclosures: DataFrame, existing: DataFrame, kind: str,
-                 catalog_df: DataFrame, wave: int,
-                 assume_deduped: bool = False) -> DataFrame:
-    """Rows to append to the ``kind`` entity table this wave.
+def new_dim_rows(deduped: DataFrame, existing: DataFrame, kind: str,
+                 catalog_df: DataFrame, wave: int) -> DataFrame:
+    """Rows to append to the ``kind`` entity table this wave, from the
+    wave's enclosures already deduped by :func:`dedup_enclosures`.
 
-    - first-seen dedup within the wave on (provider, identifier), ordered
-      by (url, doc_pos, child_pos) for determinism (skipped when the input
-      already went through :func:`dedup_enclosures`)
     - left_anti against the existing dim (find_or_create)
     - broadcast-enriched from the provider catalog (stand-in for the
       reference's per-enclosure REST fetches, src/youtube.rs:202-258 etc.)
     """
-    deduped = enclosures if assume_deduped else dedup_enclosures(enclosures)
     fresh = (
         deduped.filter(F.col("kind") == kind)
         .join(existing.select("provider", "identifier"),

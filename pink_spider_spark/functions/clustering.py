@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fanout import fan_out
+from .text import round_half_up
 
 
 def _assign(emb: DataFrame, centroids: DataFrame, id_col: str,
@@ -145,8 +146,7 @@ def ann_ivf(emb: DataFrame, query_vec: list, topk: int = 10, k: int = 8,
 
 def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
              eps: float = 0.35, id_col: str = "vec_id",
-             vec_col: str = "embedding", decimals: int = 6,
-             vectorized: bool = True) -> DataFrame:
+             vec_col: str = "embedding", decimals: int = 6) -> DataFrame:
     """SemDedup (Abbas et al. 2023): semantic near-duplicate removal
     gated by k-means clusters — a vector is DROPPED iff some lower-id
     vector in the SAME cluster has cosine similarity ≥ ``eps``
@@ -156,71 +156,36 @@ def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
 
     This is the scale form of embedding dedup for corpora where LSH
     recall is not enough: the O(n²) pair space is cut to within-cluster
-    pairs only (k clusters → ~n²/k comparisons, and in practice far
-    fewer since clusters bound the candidate sets), each pair an in-row
-    zip_with dot product.  The only shuffles are the kmeans rounds
-    (linear, see above) and one equi-join on ``cluster`` — no
-    cartesian, no all-pairs.  Cosine is rounded to ``decimals`` before
-    the threshold test so Spark and the SQL oracle agree bit-for-bit.
+    pairs only (k clusters → ~n²/k comparisons), each cluster one numpy
+    applyInPandas pass.  The only shuffles are the kmeans rounds
+    (linear, see above) and one groupBy on ``cluster`` — no cartesian,
+    no all-pairs.  Cosine is rounded to ``decimals`` before the
+    threshold test so Spark and the SQL oracle agree bit-for-bit.
 
-    ``vectorized`` (default) executes the within-cluster pair pass as a
-    numpy applyInPandas per cluster instead of the relational pair join:
-    the zip_with/aggregate cosine fold is a higher-order expression
-    Catalyst INTERPRETS (~12 µs per pair), so at n²/k pairs it dominates
-    the query.  The numpy pass accumulates the pair dot products one
-    DIMENSION at a time (acc += outer(x_d, x_d)), so every pair's double
-    chain is the identical left-to-right fold — same bit-equality policy
-    as simhash_vectorized / banded_lsh_signatures_vectorized — and the
-    final HALF_UP rounding twin of F.round(double, 6)
-    (Decimal(repr(x)), the BigDecimal.valueOf shortest-repr semantics)
-    is applied only to the few near-threshold candidate pairs.  The
-    relational form below stays as the cross-engine spec; equality is
-    pinned on the real corpus by tests/test_clustering.py and the
-    unchanged DuckDB oracle.
+    The pair dots fold one dimension at a time, the left-to-right double
+    chain of the zip_with/aggregate cosine, and round with
+    :func:`round_half_up`, so every decision is bit-equal to the
+    relational pair join in ``tests/spec_forms.py``, pinned by
+    ``test_semdedup_vectorized_equals_relational_corpus``.
     """
     assigned = kmeans_assign(emb, k=k, iters=iters, id_col=id_col,
                              vec_col=vec_col, decimals=decimals)
     vecs = emb.select(F.col(id_col),
                       F.col(vec_col).cast("array<double>").alias("__v"))
-    if vectorized:
-        side_v = assigned.join(vecs, id_col).select(
-            F.col(id_col), "cluster", F.col("__v"))
-        return _semdedup_kept_vectorized(side_v, eps, id_col, decimals)
-    norm = F.sqrt(F.aggregate(
-        F.col("__v"), F.lit(0.0), lambda a, x: a + x * x))
-    side = (assigned.join(vecs, id_col)
-            .select(F.col(id_col), "cluster", F.col("__v"),
-                    norm.alias("__n")))
-    a = side.select(F.col(id_col).alias("__i"), "cluster",
-                    F.col("__v").alias("__vi"), F.col("__n").alias("__ni"))
-    b = side.select(F.col(id_col).alias("__j"), "cluster",
-                    F.col("__v").alias("__vj"), F.col("__n").alias("__nj"))
-    cos = F.round(
-        F.aggregate(F.zip_with(F.col("__vi"), F.col("__vj"),
-                               lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("__ni") * F.col("__nj")), decimals)
-    dup = (a.join(b, "cluster")
-           .where(F.col("__j") < F.col("__i"))
-           .where(cos >= F.lit(float(eps)))
-           .select(F.col("__i").alias(id_col))
-           .distinct()
-           .withColumn("__dup", F.lit(True)))
-    return (side.join(dup, id_col, "left")
-            .select(F.col(id_col), "cluster",
-                    F.coalesce(~F.col("__dup"), F.lit(True)).alias("kept")))
+    side = assigned.join(vecs, id_col).select(
+        F.col(id_col), "cluster", F.col("__v"))
+    return _semdedup_kept(side, eps, id_col, decimals)
 
 
-#: Row-block size of the vectorized semdedup pair pass: memory per task
+#: Row-block size of the semdedup pair pass: memory per task
 #: is O(block · cluster_size) doubles, never a full cluster² matrix.
 _SEMDEDUP_BLOCK = 1024
 
 
-def _semdedup_kept_vectorized(side: DataFrame, eps: float, id_col: str,
-                              decimals: int) -> DataFrame:
+def _semdedup_kept(side: DataFrame, eps: float, id_col: str,
+                   decimals: int) -> DataFrame:
     """The within-cluster "kept" pass of :func:`semdedup` as one numpy
-    applyInPandas per cluster — bit-identical decisions to the
-    relational pair join (see semdedup docstring for the policy).
+    applyInPandas per cluster.
 
     Per cluster (rows sorted by id): norms and the pairwise Gram matrix
     are accumulated one dimension at a time so each scalar follows the
@@ -237,24 +202,18 @@ def _semdedup_kept_vectorized(side: DataFrame, eps: float, id_col: str,
     n²/k matrix at once."""
     from pyspark.sql import types as T
 
+    from .udfs import ensure_package_shipped
+
+    ensure_package_shipped(side.sparkSession)  # kept_fn calls round_half_up
     fields = {f.name: f for f in side.schema.fields}
     out_schema = T.StructType([
         fields[id_col], fields["cluster"],
         T.StructField("kept", T.BooleanType(), nullable=False)])
     margin = float(eps) - 10.0 ** (-decimals)
-    quant = "0." + "0" * (decimals - 1) + "1"
 
     def kept_fn(pdf):
-        from decimal import ROUND_HALF_UP, Decimal
-
         import numpy as np
         import pandas as pd
-
-        q = Decimal(quant)
-
-        def round_twin(v):
-            return float(Decimal(repr(float(v))).quantize(
-                q, rounding=ROUND_HALF_UP))
 
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         c = len(pdf)
@@ -284,7 +243,7 @@ def _semdedup_kept_vectorized(side: DataFrame, eps: float, id_col: str,
             cand = lower & (np.isnan(cos) | (cos >= margin))
             for bi, j in zip(*np.nonzero(cand)):
                 v = cos[bi, j]
-                if np.isnan(v) or round_twin(v) >= eps:
+                if np.isnan(v) or round_half_up(v, decimals) >= eps:
                     kept[lo + bi] = False
         return pd.DataFrame({id_col: pdf[id_col], "cluster": pdf["cluster"],
                              "kept": kept})

@@ -88,34 +88,6 @@ def ann_topk(df: DataFrame, query_vec: list, k: int = 10,
     return knn_brute_force(cands, query_vec, k, vec_col, id_col)
 
 
-def banded_lsh_signatures(df: DataFrame, bands: int = 16,
-                          planes_per_band: int = 4,
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id",
-                          dim: int = DIM) -> DataFrame:
-    """Banded random-hyperplane signatures: (id, band, bucket) where band
-    b's bucket is the ``planes_per_band``-bit sign signature of planes
-    p = b·r + i (the same deterministic md5-derived planes as
-    ``lsh_bucket``, so the DuckDB oracle reproduces every bucket).  ONE
-    scan computes all bands in-row; the explode amplifies rows ×bands —
-    the classic MinHash-banding layout applied to hyperplane LSH."""
-    r = planes_per_band
-    sigs = []
-    for band in range(bands):
-        bucket = F.lit(0).cast("long")
-        for i in range(r):
-            plane = F.array(*[F.lit(plane_component(band * r + i, d))
-                              for d in range(dim)])
-            bucket = bucket + F.when(
-                dot(F.col(vec_col), plane) >= 0,
-                F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        sigs.append(F.struct(F.lit(band).cast("int").alias("band"),
-                             bucket.alias("bucket")))
-    return (df.select(id_col, F.explode(F.array(*sigs)).alias("s"))
-            .select(id_col, F.col("s.band").alias("band"),
-                    F.col("s.bucket").alias("bucket")))
-
-
 def near_dup_pairs_lsh_banded(df: DataFrame, threshold: float = 0.3,
                               bands: int = 16, planes_per_band: int = 4,
                               vec_col: str = "embedding",
@@ -136,13 +108,11 @@ def near_dup_pairs_lsh_banded(df: DataFrame, threshold: float = 0.3,
     dedup-realistic thresholds (≥ 0.8) the same (16, 4) setting prunes
     the pair space by orders of magnitude.
 
-    The signatures come from the numpy mapInPandas pass
-    (banded_lsh_signatures_vectorized), bit-identical to the relational
-    banded_lsh_signatures, whose ~4096-node expression tree costs more
-    to codegen than to run.
+    The signatures come from the numpy pass of
+    :func:`banded_lsh_signatures`.
     """
-    sig = banded_lsh_signatures_vectorized(df, bands, planes_per_band,
-                                           vec_col, id_col, dim)
+    sig = banded_lsh_signatures(df, bands, planes_per_band,
+                                vec_col, id_col, dim)
     a = sig.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = sig.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cand = (a.join(b, ["band", "bucket"])
@@ -237,26 +207,22 @@ def ann_topk_multiprobe(df: DataFrame, query_vec: list, k: int = 10,
     return knn_brute_force(cands, query_vec, k, vec_col, id_col)
 
 
-def banded_lsh_signatures_vectorized(df: DataFrame, bands: int = 16,
-                                     planes_per_band: int = 4,
-                                     vec_col: str = "embedding",
-                                     id_col: str = "vec_id",
-                                     dim: int = DIM) -> DataFrame:
-    """Bit-identical ``banded_lsh_signatures`` as ONE numpy/Arrow
-    mapInPandas pass — the 100 TB path (same policy as
-    text.simhash_vectorized: the relational form stays as the
-    cross-engine spec, this form executes).
+def banded_lsh_signatures(df: DataFrame, bands: int = 16,
+                          planes_per_band: int = 4,
+                          vec_col: str = "embedding",
+                          id_col: str = "vec_id",
+                          dim: int = DIM) -> DataFrame:
+    """Banded random-hyperplane signatures: (id, band, bucket) where band
+    b's bucket is the ``planes_per_band``-bit sign signature of planes
+    p = b·r + i (the same deterministic md5-derived planes as
+    ``lsh_bucket``, so the DuckDB oracle reproduces every bucket), as
+    ONE numpy/Arrow mapInPandas pass that computes all plane dots of a
+    batch at once.
 
-    The relational form compiles bands·planes·dim ≈ 4096 expression
-    nodes of zip_with/aggregate folds — whole-stage codegen chokes on
-    the tree (≈10 s of compile for a 2 000-row input) and the work is a
-    plain matrix product anyway.  Here every Arrow batch computes all
-    plane dots at once; IEEE equality with the JVM fold is preserved by
-    summing SEQUENTIALLY over the dim axis (acc += V[:,d]·P[:,d], one
-    vectorized step per dimension — each scalar add is the same
+    Summing one dimension at a time (acc += V[:,d]·P[:,d]) is the same
     left-to-right double chain as ``dot``'s aggregate fold, so every
-    sign, and therefore every bucket, matches bit-for-bit; pinned by
-    tests/test_operators.py equality and the banded oracle)."""
+    sign is bit-equal to the relational ``tests/spec_forms.py`` form,
+    pinned by ``test_banded_lsh_signatures_vectorized_bit_equal``."""
     import numpy as np
 
     from pyspark.sql import types as T

@@ -1,7 +1,9 @@
 """Text-analysis + dedup primitives for large-scale training-data pipelines.
 
-All JVM-side Spark column expressions (no Python in the hot path), built so
-each has an exactly-equivalent ANSI-SQL form the DuckDB oracle can run:
+JVM-side Spark column expressions, except SimHash's one numpy Arrow pass
+(its Python tokenizer and rounding twins, ``split_tokens`` and
+``round_half_up``, serve every in-row pass), built so each has an
+exactly-equivalent ANSI-SQL form the DuckDB oracle can run:
 the shared 60-bit hash is ``int(md5(x)[:15], 16)`` —
 Spark ``conv(substr(md5(x),1,15),16,10)::long``,
 DuckDB ``('0x' || substr(md5(x),1,15))::BIGINT`` — so MinHash/SimHash
@@ -16,6 +18,9 @@ Operators (SURVEY-extension set, graded as first-class components):
 """
 
 from __future__ import annotations
+
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,6 +38,26 @@ def h60(col: Column) -> Column:
 # --------------------------------------------------------------- tokens
 def tokens(text_col: Column) -> Column:
     return F.split(F.trim(text_col), r"\s+")
+
+
+#: Java's ``\s``, which Spark's ``split`` uses: ASCII only.  Python's
+#: ``\s`` also matches NBSP, U+2003, U+3000, \x1c and \x85, which Spark
+#: keeps inside a token.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def split_tokens(s: str) -> list[str]:
+    """Python twin of :func:`tokens` for the in-row passes: ``trim``
+    strips ASCII spaces only, then split on Java's ``\\s+``."""
+    return _JAVA_WS.split(s.strip(" "))
+
+
+def round_half_up(x: float, decimals: int) -> float:
+    """Python twin of ``F.round(double, decimals)``: HALF_UP on the
+    shortest decimal repr (``BigDecimal.valueOf``), not the binary
+    value."""
+    return float(Decimal(repr(float(x))).quantize(
+        Decimal(1).scaleb(-decimals), rounding=ROUND_HALF_UP))
 
 
 def token_count(text_col: Column) -> Column:
@@ -290,70 +315,31 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
 # --------------------------------------------------------------- simhash
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             bits: int = HASH_BITS) -> DataFrame:
-    """60-bit SimHash over whitespace tokens (token-frequency weighted).
-
-    Fully relational (explode tokens x bit positions) so the DuckDB oracle
-    can reproduce it bit-for-bit; at 100 TB the same arithmetic runs in a
-    vectorized numpy pandas UDF, validated against this definition.
-    """
-    tok = (
-        df.select(id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-        .groupBy(id_col, "token")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("h", h60(F.col("token")))
-    )
-    bitsum = (
-        tok.select(
-            id_col, "cnt", "h",
-            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"))
-        .withColumn(
-            "contrib",
-            F.col("cnt") * (F.expr("shiftright(h, bit)")
-                            .bitwiseAND(F.lit(1)) * 2 - 1))
-        .groupBy(id_col, "bit")
-        .agg(F.sum("contrib").alias("s"))
-    )
-    return (
-        bitsum
-        .withColumn("term", F.when(F.col("s") > 0,
-                                   F.expr("shiftleft(1L, bit)"))
-                    .otherwise(F.lit(0).cast("long")))
-        .groupBy(id_col)
-        .agg(F.sum("term").alias("simhash"))
-    )
-
-
-def simhash_vectorized(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       bits: int = HASH_BITS) -> DataFrame:
-    """Bit-identical ``simhash`` as ONE numpy/Arrow mapInPandas pass.
-
-    The relational definition above is the cross-engine spec (DuckDB can
-    run it) but physically explodes every (doc, token) row 60x through a
-    shuffle.  This form is the 100 TB path: zero shuffles, zero row
+    """60-bit SimHash over whitespace tokens (token-frequency weighted),
+    as ONE numpy/Arrow mapInPandas pass: zero shuffles, zero row
     amplification — per Arrow batch it md5-hashes each DISTINCT token
     once (memoized across the batch), unpacks the 60 bit signs into one
-    numpy matrix and folds with a matrix-vector product.  Equality with
-    the relational form is pinned by tests/test_operators.py and by the
-    driver's DuckDB oracle for ``docs_simhash``.
+    numpy matrix and folds with a matrix-vector product.  NULL text
+    produces no output row (explode-of-NULL semantics).
 
-    Semantics matched exactly: tokens = split(trim(lower(text)), '\\s+')
-    where trim strips ASCII spaces only (Spark/DuckDB ``trim``); NULL
-    text produces no output row (explode-of-NULL semantics).
+    Tokens are :func:`split_tokens` and the sign sums are exact
+    integers, so it is bit-equal to the relational ``tests/spec_forms.py``
+    form, pinned by ``test_simhash_vectorized_bit_equal``.
     """
     from pyspark.sql import types as T
 
+    from .udfs import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)  # run() calls split_tokens
     out_schema = T.StructType([
         df.schema[id_col], T.StructField("simhash", T.LongType())])
 
     def run(batches):
         import hashlib
-        import re
 
         import numpy as np
         import pandas as pd
 
-        ws = re.compile(r"\s+")
         shifts = np.arange(bits, dtype=np.uint64)
         one = np.uint64(1)
         cache: dict = {}
@@ -362,7 +348,7 @@ def simhash_vectorized(df: DataFrame, text_col: str = "text",
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                toks = ws.split(str(text).lower().strip(" "))
+                toks = split_tokens(str(text).lower())
                 cnt: dict = {}
                 for t in toks:
                     cnt[t] = cnt.get(t, 0) + 1
@@ -409,9 +395,9 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     all-pairs scan.  Verification is one in-row
     ``bit_count(xor)`` per candidate.
 
-    Scale shape (100 TB): signatures come from the vectorized numpy
-    pass (zero shuffles); candidates are a bucket-keyed hash join —
-    identical shape to MinHash-LSH banding — with row amplification
+    Scale shape (100 TB): signatures come from the numpy pass of
+    :func:`simhash` (zero shuffles); candidates are a bucket-keyed hash
+    join — identical shape to MinHash-LSH banding — with row amplification
     exactly ``n_blocks``; the distinct and the Hamming filter are keyed
     on the pair.  Skew surface: a block value shared by k docs yields
     k² candidates in that bucket — the same exact-dup hot-bucket every
@@ -424,7 +410,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     DuckDB's ``bit_count``/``xor`` on two's-complement BIGINTs."""
     block_bits = bits // n_blocks
     mask = (1 << block_bits) - 1
-    sh = (simhash_vectorized(df, text_col, id_col)
+    sh = (simhash(df, text_col, id_col)
           # both join sides consume the signature frame — compute the
           # (mapInPandas) signature pass once, not twice
           .localCheckpoint(eager=False))

@@ -258,107 +258,50 @@ def int8_quant_stats(vec_col: Column) -> tuple[Column, Column, Column]:
 
 
 # ---------------------------------------------------------- repetition
-def bigrams(text_col: Column) -> Column:
-    """Word 2-grams as an array (lowercased tokens); empty array below 2
-    tokens — the previous sequence form emitted a degenerate unigram for
-    1-token docs via concat_ws null-skipping, diverging from the
-    oracle's WHERE s.i < len(tk) bound."""
-    return word_ngrams(text_col, 2)
-
-
-def trigrams(text_col: Column) -> Column:
-    """Word 3-grams; empty array below 3 tokens (see bigrams)."""
-    return word_ngrams(text_col, 3)
-
-
 def repetition_signals(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       vectorized: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """Gopher repetition rules 5/6-style: the most frequent word-bigram's
     share of all bigrams, and the fraction of trigram OCCURRENCES whose
-    trigram repeats within the document.  Explode + count keyed on
-    (doc_id, gram) — two map-side-combining aggregations hash-partitioned
-    by document, linear at any corpus size (requires ≥3 tokens/doc).
+    trigram repeats within the document, computed IN-ROW as one Arrow
+    mapInPandas pass with a per-doc Counter — no shuffle, no per-gram
+    rows.  A doc emits a row iff it has ≥3 tokens; max_bi / n_bi and
+    dup_tri / n_tri are single IEEE divides of exact integers
+    (n_bi = n−1, n_tri = n−2 occurrences).
 
-    ``vectorized`` (default) computes both signals fully IN-ROW as one
-    Arrow mapInPandas pass with a per-doc Counter: the relational form
-    explodes every bigram AND trigram occurrence through two full
-    shuffle+agg pipelines, and its gram projection is the interpreted
-    transform(sequence, slice+array_join) lambda (~µs per gram — the
-    same higher-order-function cost as the substring-dedup window
-    projection).  Both signals are integer-count ratios, so the only
-    float ops are one IEEE divide of exact integers and the
-    F.round(double, 4) HALF_UP twin — bit-equality is structural, and
-    pinned against the relational spec form (which remains the
-    cross-engine oracle definition) plus the unchanged DuckDB oracle."""
-    if vectorized:
-        return _repetition_signals_vectorized(df, text_col, id_col)
-    bi = (df.select(F.col(id_col),
-                    F.explode(bigrams(F.col(text_col))).alias("g"))
-          .groupBy(id_col, "g").agg(F.count("*").alias("c"))
-          .groupBy(id_col)
-          .agg(F.max("c").alias("max_bi"), F.sum("c").alias("n_bi")))
-    tri = (df.select(F.col(id_col),
-                     F.explode(trigrams(F.col(text_col))).alias("g"))
-           .groupBy(id_col, "g").agg(F.count("*").alias("c"))
-           .groupBy(id_col)
-           .agg(F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-                .alias("dup_tri"),
-                F.sum("c").alias("n_tri")))
-    return (bi.join(tri, id_col)
-            .select(id_col,
-                    F.round(F.col("max_bi") / F.col("n_bi").cast("double"), 4)
-                    .alias("top_bigram_frac"),
-                    F.round(F.col("dup_tri") / F.col("n_tri").cast("double"), 4)
-                    .alias("dup_trigram_frac")))
-
-
-def _repetition_signals_vectorized(df: DataFrame, text_col: str,
-                                   id_col: str) -> DataFrame:
-    """The executing twin of :func:`repetition_signals` (see its
-    docstring for the policy): tokens use the pinned split/strip twin of
-    split(trim(lower(text)), '\\s+'); a doc emits a row iff it has ≥3
-    tokens (the relational inner bi⋈tri join drops shorter docs);
-    max_bi / n_bi and dup_tri / n_tri are single IEEE divides of exact
-    integers (n_bi = n−1, n_tri = n−2 — the occurrence totals the
-    relational SUM(c) computes), rounded with the established
-    Decimal-HALF_UP twin of F.round(double, 4)."""
+    Tokens are :func:`X.split_tokens` and rounding is
+    :func:`X.round_half_up`, so it is bit-equal to the relational
+    explode+agg ``tests/spec_forms.py`` form, pinned by
+    ``test_repetition_signals_vectorized_equals_relational``."""
     from pyspark.sql import types as T
 
+    from .udfs import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)  # run() calls X.split_tokens
     out_schema = T.StructType([
         df.schema[id_col],
         T.StructField("top_bigram_frac", T.DoubleType()),
         T.StructField("dup_trigram_frac", T.DoubleType())])
 
     def run(batches):
-        import re
         from collections import Counter
-        from decimal import ROUND_HALF_UP, Decimal
 
         import pandas as pd
-
-        ws = re.compile(r"\s+")
-        q = Decimal("0.0001")
-
-        def r4(v):
-            return float(Decimal(repr(float(v))).quantize(
-                q, rounding=ROUND_HALF_UP))
 
         for pdf in batches:
             ids, tb, dt = [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                toks = ws.split(str(text).lower().strip(" "))
+                toks = X.split_tokens(str(text).lower())
                 n = len(toks)
                 if n < 3:
                     continue
                 bc = Counter(" ".join(toks[i:i + 2]) for i in range(n - 1))
                 tc = Counter(" ".join(toks[i:i + 3]) for i in range(n - 2))
                 ids.append(did)
-                tb.append(r4(max(bc.values()) / float(n - 1)))
-                dt.append(r4(sum(c for c in tc.values() if c > 1)
-                             / float(n - 2)))
+                tb.append(X.round_half_up(max(bc.values()) / float(n - 1), 4))
+                dt.append(X.round_half_up(
+                    sum(c for c in tc.values() if c > 1) / float(n - 2), 4))
             yield pd.DataFrame({
                 id_col: pd.Series(ids, dtype="int64"),
                 "top_bigram_frac": pd.Series(tb, dtype="float64"),
@@ -430,35 +373,30 @@ def word_ngrams(text_col: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _distinct_ngrams_vectorized(df: DataFrame, text_col: str, id_col: str,
-                                n: int) -> DataFrame:
+def _distinct_ngrams(df: DataFrame, text_col: str, id_col: str,
+                     n: int) -> DataFrame:
     """(id, gram) rows — one per DISTINCT word n-gram per document — as
-    one Arrow mapInPandas pass: the executing twin of
-    ``explode(array_distinct(word_ngrams(text, n)))``.  The relational
-    projection evaluates the interpreted transform(sequence,
-    slice+array_join) lambda per gram (the same higher-order-function
-    cost as the substring-dedup window projection); here each gram is
-    the identical space-join of the identical lowercased token slice
-    (tokens = the pinned split/strip twin of split(trim(lower(text)),
-    '\\s+')), so every downstream row is byte-equal.  Docs with fewer
+    one Arrow mapInPandas pass: each gram is the space-join of a
+    lowercased :func:`X.split_tokens` slice, the rows of
+    ``explode(array_distinct(word_ngrams(text, n)))``.  Docs with fewer
     than n tokens emit nothing (explode-of-empty-array semantics)."""
     from pyspark.sql import types as T
 
+    from .udfs import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)  # run() calls X.split_tokens
     out_schema = T.StructType([
         df.schema[id_col], T.StructField("gram", T.StringType())])
 
     def run(batches):
-        import re
-
         import pandas as pd
 
-        ws = re.compile(r"\s+")
         for pdf in batches:
             ids, grams = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                toks = ws.split(str(text).lower().strip(" "))
+                toks = X.split_tokens(str(text).lower())
                 m = len(toks)
                 if m < n:
                     continue
@@ -474,8 +412,7 @@ def _distinct_ngrams_vectorized(df: DataFrame, text_col: str, id_col: str,
 
 def contamination(docs: DataFrame, bench: DataFrame, n: int = 3,
                   threshold: float = 0.5, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  vectorized: bool = True) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """Benchmark decontamination (GPT-3 appx C / Llama-style n-gram
     overlap): for every candidate document, the fraction of its DISTINCT
     word n-grams that appear anywhere in the benchmark/eval set.  A doc
@@ -483,25 +420,16 @@ def contamination(docs: DataFrame, bench: DataFrame, n: int = 3,
 
     Scale shape: the benchmark side is an eval suite — MBs, not TBs —
     so its distinct-gram set is broadcast; the corpus side computes
-    per-doc distinct grams IN-ROW (``array_distinct`` before the
-    explode, no (doc,gram) shuffle) and the only exchange is the
-    doc-keyed count aggregation with map-side combine.  Linear in
-    corpus size, no skew surface (gram hot-ness never forms a join
-    key on the big side — the join is broadcast-hash).
+    per-doc distinct grams IN-ROW (:func:`_distinct_ngrams`, no
+    (doc,gram) shuffle) and the only exchange is the doc-keyed count
+    aggregation with map-side combine.  Linear in corpus size, no skew
+    surface (gram hot-ness never forms a join key on the big side — the
+    join is broadcast-hash).
 
-    ``vectorized`` (default) computes the corpus side's per-doc
-    distinct grams via :func:`_distinct_ngrams_vectorized` (byte-equal
-    rows, C-speed) instead of the interpreted relational gram lambda;
-    the benchmark side stays relational — it is broadcast-sized by
-    definition, so its projection cost is nil and the spec form keeps
-    running cross-engine there."""
-    if vectorized:
-        cand = _distinct_ngrams_vectorized(docs, text_col, id_col, n)
-    else:
-        cand = docs.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), n)))
-            .alias("gram"))
+    The corpus-side grams come from :func:`X.split_tokens`, so the rows
+    are byte-equal to the relational ``tests/spec_forms.py`` form,
+    pinned by ``test_contamination_vectorized_equals_relational``."""
+    cand = _distinct_ngrams(docs, text_col, id_col, n)
     bgrams = (bench.select(
         F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
         .distinct().withColumn("hit", F.lit(1)))
@@ -589,36 +517,20 @@ def filter_pipeline(docs: DataFrame, bench: DataFrame, n: int = 3,
 
 
 # ----------------------------------------------- exact substring dedup
-def window_hashes(text_col: Column, k: int = 20) -> Column:
-    """md5 fingerprints of every k-token window (1-based start
-    positions 1..n-k+1); empty array for blank docs or docs shorter
-    than k tokens.  The md5 of the space-joined slice is the
-    cross-engine window key (identical string in DuckDB's md5())."""
-    tk = X.tokens(text_col)
-    n = F.size(tk)
-    return F.when(
-        (F.trim(text_col) == "") | (n < k), F.array().cast("array<string>")
-    ).otherwise(F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.md5(F.array_join(F.slice(tk, i, k), " "))))
-
-
-def _token_window_hashes_vectorized(df: DataFrame, text_col: str,
-                                    id_col: str, k: int) -> DataFrame:
-    """(id, tk, whs) as ONE Arrow mapInPandas pass — the executing twin
-    of ``(X.tokens, window_hashes)`` (same policy as
-    text.simhash_vectorized: the relational form stays the cross-engine
-    spec, this form runs).  The relational projection evaluates a
-    higher-order transform(sequence, slice+array_join+md5) lambda —
-    Catalyst interprets higher-order functions rather than codegen-ing
-    them, ~17 µs per window.  Here each window is the identical md5 hex
-    of the identical space-joined token slice (hashlib, C speed), so
-    every downstream row is byte-equal; tokens use the established twin
-    of split(trim(text), '\\s+') — ``.strip(' ')`` (Spark trim strips
-    ASCII spaces) + Python ``\\s+`` (pinned green vs the DuckDB oracle
-    at both SFs, same as the simhash twin)."""
+def _token_window_hashes(df: DataFrame, text_col: str, id_col: str,
+                         k: int) -> DataFrame:
+    """(id, tk, whs) as ONE Arrow mapInPandas pass: ``tk`` is
+    :func:`X.split_tokens` of the text and ``whs`` the md5 hex of every
+    space-joined k-token window (1-based starts 1..n-k+1; empty below k
+    tokens) — the cross-engine window key, the identical string in
+    DuckDB's md5().  The tokens and md5s are byte-equal to the relational
+    ``(tokens, window_hashes)`` ``tests/spec_forms.py`` form, pinned by
+    ``test_token_window_hashes_vectorized_equals_relational``."""
     from pyspark.sql import types as T
 
+    from .udfs import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)  # run() calls X.split_tokens
     out_schema = T.StructType([
         df.schema[id_col],
         T.StructField("tk", T.ArrayType(T.StringType())),
@@ -626,17 +538,15 @@ def _token_window_hashes_vectorized(df: DataFrame, text_col: str,
 
     def run(batches):
         import hashlib
-        import re
 
         import pandas as pd
 
-        ws = re.compile(r"\s+")
         for pdf in batches:
             ids, tks, whss = [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                toks = ws.split(str(text).strip(" "))
+                toks = X.split_tokens(str(text))
                 n = len(toks)
                 whs = [hashlib.md5(
                     " ".join(toks[i:i + k])
@@ -678,15 +588,12 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
     collect_set (bounded by doc length).  The final token filter is
     in-row (higher-order F.filter with index lambda), no UDF.
 
-    The rolling-hash projection executes as the vectorized Arrow twin
-    (``_token_window_hashes_vectorized`` — byte-identical window md5s,
-    fanned out to the session parallelism when a small scan
-    under-partitions it; the relational ``window_hashes`` above remains
-    the cross-engine spec form); every aggregation here is
+    The window fingerprints come from one Arrow pass
+    (:func:`_token_window_hashes`); every aggregation here is
     min/count/collect_set — order-free, so partitioning cannot move
     the answer."""
     docs = df.filter(F.trim(F.col(text_col)) != "")
-    toks = _token_window_hashes_vectorized(docs, text_col, id_col, k)
+    toks = _token_window_hashes(docs, text_col, id_col, k)
     wins = toks.select(
         F.col(id_col),
         F.posexplode("whs").alias("pos0", "wh")

@@ -555,6 +555,9 @@ class _TreeBuilder(HTMLParser):
 
     def _start_tag(self, tag: str, attrs: list) -> None:
         """A start tag with deduplicated attributes (not self-closing)."""
+        # the <pre>/<listing>/<textarea> LF skip applies only when the LF
+        # is the very next token; any tag, comment or doctype ends it
+        self.skip_newline = False
         if tag in BLOCK_START:
             cur = self._plain_body()
             if cur is not None:
@@ -568,6 +571,7 @@ class _TreeBuilder(HTMLParser):
         self._start(tag, attrs, self_closing=False)
 
     def handle_startendtag(self, tag, attrs):
+        self.skip_newline = False
         self._start(tag, _dedupe_attrs(attrs), self_closing=True)
         # stdlib skips cdata mode for self-closing syntax; spec ignores
         # the slash on HTML rawtext elements, so re-enter it
@@ -625,6 +629,7 @@ class _TreeBuilder(HTMLParser):
             super().clear_cdata_mode()
 
     def handle_endtag(self, tag):
+        self.skip_newline = False
         if (tag == "script" and self.cdata_elem == "script"
                 and self.mode == TEXT_MODE and self._script_esc == 2):
             # §13.2.5.27: inside double-escaped script data a </script>
@@ -680,6 +685,7 @@ class _TreeBuilder(HTMLParser):
             self.frameset_ok = False
 
     def handle_comment(self, data):
+        self.skip_newline = False
         self._flush_table_text()
         if self.mode in (INITIAL, BEFORE_HTML, AFTER_AFTER_BODY):
             self.document.append(Node(COMMENT, text=data))
@@ -689,6 +695,7 @@ class _TreeBuilder(HTMLParser):
             self._insert_node(Node(COMMENT, text=data))
 
     def handle_decl(self, decl):
+        self.skip_newline = False
         if decl[:7].lower() == "doctype":
             self._doctype(decl[7:].strip())
         else:

@@ -591,10 +591,10 @@ SELECT doc_id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS B
 FROM bits GROUP BY doc_id
 """, headline=True)
 def docs_simhash(spark, sf_dir):
-    """60-bit SimHash per document — vectorized numpy path (the oracle SQL
-    is the relational spec, so the hash check pins UDF == DuckDB; UDF ==
-    relational-Spark is pinned by tests/test_operators.py)."""
-    return X.simhash_vectorized(_t(spark, sf_dir, "documents"))
+    """60-bit SimHash per document — one numpy Arrow pass (the oracle SQL
+    is the relational spec, so the hash check pins it == DuckDB; the
+    relational Spark form lives in tests/spec_forms.py)."""
+    return X.simhash(_t(spark, sf_dir, "documents"))
 
 
 #: shared CTE prefix: 60-bit simhash -> Manku 4x15-bit block candidates
@@ -637,7 +637,7 @@ def docs_simhash_near_pairs(spark, sf_dir):
     equi-join EXACT-recall for Hamming ≤ 3, then one in-row
     bit_count(xor) verifies each candidate (functions/text.py
     simhash_near_pairs — same bucket-join shape as MinHash-LSH banding,
-    never all-pairs).  Signatures from the vectorized numpy pass; the
+    never all-pairs).  Signatures from the numpy simhash pass; the
     oracle replays the relational simhash spec + the identical integer
     block/xor arithmetic."""
     return X.simhash_near_pairs(_t(spark, sf_dir, "documents"))

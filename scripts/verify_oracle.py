@@ -118,6 +118,9 @@ def main():
     from pink_spider_spark import queries as Q
     from pink_spider_spark.session import get_spark
 
+    if only - set(Q.QUERY_BUILDERS):
+        sys.exit(f"unknown queries: {sorted(only - set(Q.QUERY_BUILDERS))}")
+    names = [n for n in Q.QUERY_BUILDERS if not only or n in only]
     spark = get_spark(app_name="verify-oracle")
     con = duckdb.connect()
     for t in TABLES:
@@ -126,9 +129,8 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     failures = []
-    for name, fn in Q.QUERY_BUILDERS.items():
-        if only and name not in only:
-            continue
+    for name in names:
+        fn = Q.QUERY_BUILDERS[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -185,7 +187,7 @@ def main():
         else:
             print(f"ok   {name}: rows={len(srows)} hash match [{time.time()-t0:.1f}s]")
 
-    print(f"\n{len(Q.QUERY_BUILDERS) - len(failures)}/{len(Q.QUERY_BUILDERS)} pass")
+    print(f"\n{len(names) - len(failures)}/{len(names)} pass")
     spark.stop()
     sys.exit(1 if failures else 0)
 

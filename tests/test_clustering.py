@@ -1,6 +1,7 @@
 """Deterministic Lloyd's k-means (functions/clustering.py) — hand pins."""
 
 from pink_spider_spark.functions import clustering as C
+from tests import spec_forms as SF
 
 
 def _emb(spark, rows):
@@ -136,15 +137,14 @@ def test_pq_adc_is_sum_of_subspace_tables(spark):
 
 
 def test_semdedup_vectorized_equals_relational_corpus(spark):
-    # the vectorized pair pass is the execution default; the relational
-    # pair join stays as the cross-engine spec (same policy as
-    # simhash_vectorized) — pin decision-by-decision equality on the
-    # real embeddings corpus
+    # the numpy pair pass must reproduce the relational pair join
+    # (tests/spec_forms.py) decision by decision on the real
+    # embeddings corpus
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rel = {r.vec_id: (r.cluster, r.kept)
-           for r in C.semdedup(emb, vectorized=False).collect()}
+           for r in SF.semdedup(emb).collect()}
     vec = {r.vec_id: (r.cluster, r.kept)
-           for r in C.semdedup(emb, vectorized=True).collect()}
+           for r in C.semdedup(emb).collect()}
     assert rel == vec and any(not k for _, k in rel.values())
 
 
@@ -164,7 +164,7 @@ def test_semdedup_vectorized_row_blocking(spark, monkeypatch):
 def test_semdedup_zero_vector_behavior(spark):
     # an all-zero vector makes cosine 0/0: the relational spec form
     # RAISES under Spark's default ANSI mode (DIVIDE_BY_ZERO), so it
-    # defines no decision there; the vectorized path stays total —
+    # defines no decision there; the numpy pass stays total —
     # NaN follows Spark's NaN-largest ordering (counts as a duplicate
     # hit), so EVERY higher-id row compared against a zero vector is
     # dropped (1 vs 0 and 2 vs 0 are both NaN)
@@ -172,8 +172,7 @@ def test_semdedup_zero_vector_behavior(spark):
 
     df = _emb(spark, [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 1.0])])
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        C.semdedup(df, k=1, iters=1, eps=0.9, vectorized=False).collect()
+        SF.semdedup(df, k=1, iters=1, eps=0.9).collect()
     vec = {r.vec_id: r.kept
-           for r in C.semdedup(df, k=1, iters=1, eps=0.9,
-                               vectorized=True).collect()}
+           for r in C.semdedup(df, k=1, iters=1, eps=0.9).collect()}
     assert vec == {0: True, 1: False, 2: False}

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from pink_spider_spark.functions import text as X
 from pink_spider_spark.operators import relational as R
+from tests import spec_forms as SF
 from tests.spark_fixtures import spark_vs_oracle
 
 
@@ -128,11 +129,9 @@ def test_ngram_jaccard_prefix_equals_exact(spark):
 def test_simhash_vectorized_bit_equal(spark):
     """The numpy mapInPandas SimHash must be bit-identical to the
     relational (explode) definition on real corpus text."""
-    from pink_spider_spark.functions import text as X
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rel = {r.doc_id: r.simhash for r in X.simhash(docs).collect()}
-    vec = {r.doc_id: r.simhash for r in X.simhash_vectorized(docs).collect()}
+    rel = {r.doc_id: r.simhash for r in SF.simhash(docs).collect()}
+    vec = {r.doc_id: r.simhash for r in X.simhash(docs).collect()}
     assert rel == vec
     assert len(vec) > 0
 
@@ -343,9 +342,9 @@ def test_banded_lsh_signatures_vectorized_bit_equal(spark):
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rel = {(r.vec_id, r.band): r.bucket
-           for r in S.banded_lsh_signatures(df, 16, 4).collect()}
+           for r in SF.banded_lsh_signatures(df, 16, 4).collect()}
     vec = {(r.vec_id, r.band): r.bucket
-           for r in S.banded_lsh_signatures_vectorized(df, 16, 4).collect()}
+           for r in S.banded_lsh_signatures(df, 16, 4).collect()}
     assert rel == vec and len(rel) > 0
 
 
@@ -355,7 +354,7 @@ def test_simhash_near_pairs_exact_recall_vs_brute_force(spark):
     brute-force all-pairs Hamming filter over real corpus text."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sh = {r.doc_id: r.simhash
-          for r in X.simhash_vectorized(docs).collect()}
+          for r in X.simhash(docs).collect()}
     ids = sorted(sh)
     brute = {(a, b): bin(sh[a] ^ sh[b]).count("1")
              for i, a in enumerate(ids) for b in ids[i + 1:]

@@ -8,7 +8,9 @@ weights 1, 4, 16 and 64.  The digest covers ``serialize(parse_html(doc))``
 and every ``extract()`` field.  A change to tree construction or
 tokenizing that alters any output byte on this corpus changes the digest;
 the pinned value was computed before the in-body fast path and the regex
-scanner landed in ``htmldom/parser.py``.
+scanner landed in ``htmldom/parser.py``, then re-pinned once when the
+``<pre>``/``<listing>`` LF skip began to end at the next tag or comment
+(random doc 484 keeps a newline after a ``<br>`` inside ``<pre>``).
 """
 
 import hashlib
@@ -19,7 +21,7 @@ from pink_spider_spark.htmldom import parse_html, serialize
 from pink_spider_spark.sources import synth
 from tests.test_extract_fuzz import SNIPPETS, TAGS
 
-PINNED = "273b2072f1372020a175d25af9c4b6414bed8b46e8681de3dfcbd19736f0bab5"
+PINNED = "2ad9a40efd1560c9689b8d3faecca512a0fadb726a747a5012147b6cd5f0ede0"
 
 # text characters: markup delimiters, every whitespace the tokenizer
 # distinguishes (\v and U+00A0/U+2003 are \s for the stdlib regexes but

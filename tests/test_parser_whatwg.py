@@ -147,6 +147,11 @@ GOLDENS = [
     # the newline right after <pre> is dropped
     ("<div><pre>\nx</pre>y</div>",
      f"{B}<div><pre>x</pre>y</div>{E}"),
+    # ...only when it is the very next token: a tag or comment between
+    # ends the skip (html5ever resets ignore_lf on every token)
+    ("<pre><b>\nx</b></pre>", f"{B}<pre><b>\nx</b></pre>{E}"),
+    ("<listing><!--c-->\nx</listing>",
+     f"{B}<listing><!--c-->\nx</listing>{E}"),
     # PLAINTEXT: everything after the start tag is text
     ("<p>a<plaintext>b</p><div>c",
      f"{B}<p>a</p><plaintext>b</p><div>c</plaintext>{E}"),

@@ -4,6 +4,7 @@ connected components, PII scrub, int8 quantization)."""
 from pyspark.sql import functions as F
 
 from pink_spider_spark.functions import webtext as W
+from tests import spec_forms as SF
 
 
 def test_gopher_signals_hand_doc(spark):
@@ -257,8 +258,8 @@ def test_wrap_lines_and_ngrams_degenerate_docs(spark):
     rows = {r.doc_id: r for r in df.select(
         "doc_id",
         W.wrap_lines(F.col("text")).alias("lines"),
-        W.bigrams(F.col("text")).alias("bi"),
-        W.trigrams(F.col("text")).alias("tri")).collect()}
+        SF.bigrams(F.col("text")).alias("bi"),
+        SF.trigrams(F.col("text")).alias("tri")).collect()}
     assert rows[0].lines == [] and rows[1].lines == []
     assert rows[2].lines == ["one"]
     assert rows[2].bi == [] and rows[2].tri == []
@@ -324,9 +325,9 @@ def test_exact_substring_dedup_overlap_and_within_doc(spark):
 
 
 def test_token_window_hashes_vectorized_equals_relational(spark):
-    # the executing Arrow twin must be byte-equal to the relational
+    # the Arrow pass must be byte-equal to the relational
     # (tokens, window_hashes) spec on real corpus text — every token
-    # array and every window md5 (same policy pin as simhash_vectorized)
+    # array and every window md5 (same policy pin as simhash)
     from pyspark.sql import functions as F
 
     from pink_spider_spark.functions import text as X
@@ -335,9 +336,9 @@ def test_token_window_hashes_vectorized_equals_relational(spark):
             .filter(F.trim(F.col("text")) != ""))
     rel = {r.doc_id: (r.tk, r.whs) for r in docs.select(
         "doc_id", X.tokens(F.col("text")).alias("tk"),
-        W.window_hashes(F.col("text"), 5).alias("whs")).collect()}
+        SF.window_hashes(F.col("text"), 5).alias("whs")).collect()}
     vec = {r.doc_id: (r.tk, r.whs) for r in
-           W._token_window_hashes_vectorized(
+           W._token_window_hashes(
                docs, "text", "doc_id", 5).collect()}
     assert rel == vec and len(rel) > 0
 
@@ -545,8 +546,8 @@ def test_zipf_stats_top_token_tie_breaks_lexicographically(spark):
     assert r.top_token == "y" and r.top_freq == 2  # smallest among ties
 
 def test_repetition_signals_vectorized_equals_relational(spark):
-    # the in-row Arrow twin is the execution default; the relational
-    # explode+agg form stays the cross-engine spec — pin row-by-row
+    # the in-row Arrow pass must reproduce the relational explode+agg
+    # spec form (tests/spec_forms.py) — pin row-by-row
     # equality (values AND the ≥3-token row-drop) on real corpus text
     # plus degenerate 0/1/2/3-token docs
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -556,15 +557,15 @@ def test_repetition_signals_vectorized_equals_relational(spark):
         ["doc_id", "text"])
     docs = corpus.select("doc_id", "text").unionByName(extra)
     rel = {r.doc_id: (r.top_bigram_frac, r.dup_trigram_frac)
-           for r in W.repetition_signals(docs, vectorized=False).collect()}
+           for r in SF.repetition_signals(docs).collect()}
     vec = {r.doc_id: (r.top_bigram_frac, r.dup_trigram_frac)
-           for r in W.repetition_signals(docs, vectorized=True).collect()}
+           for r in W.repetition_signals(docs).collect()}
     assert rel == vec and len(rel) > 100
     assert 10**9 + 3 in rel and 10**9 + 2 not in rel
 
 
 def test_contamination_vectorized_equals_relational(spark):
-    # the corpus-side distinct-gram Arrow twin must reproduce the
+    # the corpus-side distinct-gram Arrow pass must reproduce the
     # relational explode(array_distinct(word_ngrams)) rows exactly —
     # pinned via full contamination output equality on real corpus text
     # with a benchmark sliced from the same corpus (guaranteed hits)
@@ -573,12 +574,10 @@ def test_contamination_vectorized_equals_relational(spark):
     bench = corpus.filter("doc_id % 17 = 0")
     rel = {r.doc_id: (r.n_grams, r.hit_grams, r.contamination_frac,
                       r.contaminated)
-           for r in W.contamination(corpus, bench, n=3,
-                                    vectorized=False).collect()}
+           for r in SF.contamination(corpus, bench, n=3).collect()}
     vec = {r.doc_id: (r.n_grams, r.hit_grams, r.contamination_frac,
                       r.contaminated)
-           for r in W.contamination(corpus, bench, n=3,
-                                    vectorized=True).collect()}
+           for r in W.contamination(corpus, bench, n=3).collect()}
     assert rel == vec and len(rel) > 100
     assert any(v[3] for v in rel.values())
 
