@@ -1,4 +1,4 @@
-"""Link-graph PageRank for frontier prioritization.
+"""Link-graph ranking for frontier prioritization.
 
 A Common-Crawl-scale frontier should not dequeue in FIFO/seed order:
 authority-ranked hosts first is the standard production policy (cf.
@@ -7,16 +7,25 @@ already materializes the link graph — every entries row carries
 ``(url, links)`` — so rank is derivable from the engine's own tables
 with no new source.
 
-- ``pagerank(edges)``     — generic iterative PageRank over a distinct
-  (src, dst) edge frame.  Dangling mass is dropped (nodes with no
+- ``pagerank(edges)``     — generic iterative PageRank over a (src,
+  dst) edge frame.  Dangling mass is dropped (nodes with no
   out-edges contribute nothing; they still receive teleport + inbound
   mass) — the common simplified variant, mirrored exactly by the SQL
-  oracle (`graph_pagerank` in queries.py).
-- ``host_pagerank(entries)`` — host-level edges from extracted pages.
+  oracle (`graph_pagerank` in queries.py).  ``trustrank``, ``hits``,
+  ``opic`` and ``salsa`` are the other frontier-priority scores.
+- ``host_edges(entries)`` — the host-level link graph of extracted
+  pages, feeding ``host_pagerank``, ``host_opic`` and ``host_harmonic``.
 - ``with_host_rank_priority(frontier, ranks)`` — joins host rank onto
   frontier rows as the priority column (an OPT-IN priority source; the
   default wave priority is untouched so reference-ordering parity is
   preserved).
+
+Edge contract: every operator here takes any frame with two endpoint
+columns and ranks its DISTINCT (src, dst) pairs — duplicates collapse
+(one link counts once).  The edge list comes from
+``functions/graph.py``'s ``directed_edges``, which pins it once,
+hash-partitioned on the first join key and lineage-truncated; the
+Pregel loop invariant, as in every graph operator of the engine.
 
 Scale shape (10^10 URLs): host-level, so the graph is ~10^7 nodes, not
 10^10 — ranks and out-degrees are broadcast-sized there; iteration
@@ -24,17 +33,18 @@ joins are all KEYED (src/dst), so AQE picks broadcast vs shuffle per
 actual size and a page-level edge list degrades to shuffle joins, not
 OOM.  The one explicit broadcast (with_host_rank_priority) is guarded
 by a limit-bounded node-count probe.  Each iteration is one src-keyed
-join + one dst-keyed linear aggregation with map-side combine.  ``localCheckpoint`` truncates lineage per round
-(same policy as webtext.connected_components).  Determinism: ranks are
-rounded to 8 dp every round, so Spark and the oracle walk identical
-trajectories.
+join + one dst-keyed linear aggregation with map-side combine.
+``localCheckpoint`` truncates lineage per round.  Determinism: ranks
+are rounded to 8 dp every round, so Spark and the oracle walk
+identical trajectories.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import graph as G
 from ..functions.udfs import host_col
 
 
@@ -49,55 +59,50 @@ def _teleport(damping: float) -> float:
     return round(1.0 - damping, 12)
 
 
-def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
-             src: str = "src", dst: str = "dst",
-             decimals: int = 8) -> DataFrame:
-    """Iterative PageRank over distinct (src, dst) edges → (node, rank).
-    Node set = src ∪ dst; init 1/n; per round:
-    rank(v) = (1-d)/n + d·Σ rank(u)/outdeg(u) over in-edges u→v."""
-    # materialize the deduped edge list ONCE, hash-partitioned on src:
-    # nodes, outdeg and every iteration's contrib join all consume it,
-    # so without this the upstream edge derivation (a join at sf-bench
-    # scale, an entries explode in host_pagerank) re-executes 2+iters
-    # times — and the src partitioning lets each round's join reuse the
-    # exchange instead of re-shuffling the (large) edge side.  The same
-    # pattern every Pregel-style engine uses: edges are the loop
-    # invariant, pin them.  localCheckpoint also truncates the lineage
-    # the iterations would otherwise replay.
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
-    # the other three loop invariants get the same pin as the edge list:
-    # nodes is consumed twice per round (rank rebuild + teleport count),
-    # outdeg once per round — unpinned, every reference re-executed the
-    # union-distinct / groupBy shuffle against the edge blocks each
-    # iteration (3 extra shuffles per round at 3 consumers)
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
-    nn = (nodes.agg(F.count("*").cast("double").alias("n"))
-          .localCheckpoint(eager=False))
+def _propagate(e: DataFrame, base: DataFrame, init: Column,
+               teleport: Column, iters: int, damping: float,
+               decimals: int) -> DataFrame:
+    """The PageRank rounds shared by ``pagerank`` and ``trustrank`` over
+    the pinned edge list ``e``: rank_0 = init; rank_k(v) = teleport +
+    d·Σ rank(u)/outdeg(u) over in-edges u→v, rounded to ``decimals``
+    every round.  ``base`` holds one row per node with the columns that
+    ``init`` and ``teleport`` read."""
+    # out-degrees are read every round: pin them like the edge list
     outdeg = (e.groupBy("src").agg(F.count("*").cast("double")
                                    .alias("outdeg"))
               .localCheckpoint(eager=False))
-    ranks = (nodes.crossJoin(F.broadcast(nn))
-             .select("node", F.round(F.lit(1.0) / F.col("n"), decimals)
-                     .alias("rank")))
+    ranks = base.select("node", F.round(init, decimals).alias("rank"))
     for _ in range(iters):
         contribs = (e.join(outdeg, "src")
                     .join(ranks.withColumnRenamed("node", "src"), "src")
                     .groupBy("dst")
                     .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("c")))
-        ranks = (nodes.crossJoin(F.broadcast(nn))
-                 .join(contribs.withColumnRenamed("dst", "node"),
-                       "node", "left")
+        ranks = (base.join(contribs.withColumnRenamed("dst", "node"),
+                           "node", "left")
                  .select("node", F.round(
-                     F.lit(_teleport(damping)) / F.col("n")
+                     teleport
                      + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0)),
                      decimals).alias("rank"))
                  .localCheckpoint(eager=False))
     return ranks
+
+
+def pagerank(edges: DataFrame, iters: int = 3, damping: float = 0.85,
+             src: str = "src", dst: str = "dst",
+             decimals: int = 8) -> DataFrame:
+    """Iterative PageRank over (src, dst) edges → (node, rank).
+    Node set = src ∪ dst; init 1/n; per round:
+    rank(v) = (1-d)/n + d·Σ rank(u)/outdeg(u) over in-edges u→v."""
+    e = G.directed_edges(edges, src, dst, "src")
+    # the node set and its count are read every round (rank rebuild +
+    # teleport): pinned, so no round re-runs their shuffles
+    nodes = G.edge_nodes(e).localCheckpoint(eager=False)
+    nn = (nodes.agg(F.count("*").cast("double").alias("n"))
+          .localCheckpoint(eager=False))
+    return _propagate(e, nodes.crossJoin(F.broadcast(nn)),
+                      F.lit(1.0) / F.col("n"),
+                      F.lit(_teleport(damping)) / F.col("n"),
+                      iters, damping, decimals)
 
 
 def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
@@ -116,18 +121,10 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
     trust vector as both init and teleport).  A node unreachable from
     every seed scores exactly 0.0 — the demotion property.
 
-    Scale/determinism contract identical to ``pagerank`` above: edges
-    pinned once src-partitioned, per round one keyed join + one
-    dst-keyed linear agg, the seed vector is a broadcast-sized join
-    side (|S| ≪ n by construction), trajectory rounded to ``decimals``
-    every round so the SQL oracle replays it exactly."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
+    Same rounds as ``pagerank`` (one shared loop); the seed vector is a
+    broadcast-sized join side (|S| ≪ n by construction)."""
+    e = G.directed_edges(edges, src, dst, "src")
+    nodes = G.edge_nodes(e).localCheckpoint(eager=False)
     sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     ns = sd.agg(F.count("*").cast("double").alias("ns"))
     base = (nodes.join(F.broadcast(sd.withColumn("is_seed", F.lit(True))),
@@ -137,39 +134,23 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
                     F.when(F.col("is_seed"), F.lit(1.0) / F.col("ns"))
                     .otherwise(F.lit(0.0)).alias("s"))
             .localCheckpoint(eager=False))
-    outdeg = (e.groupBy("src").agg(F.count("*").cast("double")
-                                   .alias("outdeg"))
-              .localCheckpoint(eager=False))
-    ranks = base.select("node", F.round(F.col("s"), decimals).alias("rank"))
-    for _ in range(iters):
-        contribs = (e.join(outdeg, "src")
-                    .join(ranks.withColumnRenamed("node", "src"), "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("c")))
-        ranks = (base.join(contribs.withColumnRenamed("dst", "node"),
-                           "node", "left")
-                 .select("node", F.round(
-                     F.lit(_teleport(damping)) * F.col("s")
-                     + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0)),
-                     decimals).alias("rank"))
-                 .localCheckpoint(eager=False))
-    return ranks
+    return _propagate(e, base, F.col("s"),
+                      F.lit(_teleport(damping)) * F.col("s"),
+                      iters, damping, decimals)
 
 
 def hits(edges: DataFrame, iters: int = 2,
          src: str = "src", dst: str = "dst") -> DataFrame:
-    """HITS hubs & authorities (Kleinberg 1999) over distinct (src, dst)
-    edges → (node, auth, hub) — the other classic crawl-frontier
+    """HITS hubs & authorities (Kleinberg 1999) over (src, dst) edges →
+    (node, auth, hub) — the other classic crawl-frontier
     authority score beside PageRank: a good HUB page is where a crawler
     harvests outlinks; a good AUTHORITY is what it should fetch first.
 
     Per round: auth(v) = Σ hub(u) over in-edges, L1-normalized; then
     hub(u) = Σ auth(v) over out-edges, L1-normalized (L1 instead of the
     classic L2 — same fixed-point direction, no sqrt, and it makes the
-    trajectory exactly representable, below).  Scale shape mirrors
-    ``pagerank``: the edge list is the loop invariant — materialized
-    once, hash-partitioned, lineage-truncated — and each half-round is
-    one keyed join + one linear dst/src-keyed aggregation with map-side
+    trajectory exactly representable, below).  Each half-round is one
+    keyed join + one linear dst/src-keyed aggregation with map-side
     combine plus a scalar total; scores stay mergeable integers.
 
     Determinism (stronger than pagerank's 8-dp float pin): scores are
@@ -178,13 +159,8 @@ def hits(edges: DataFrame, iters: int = 2,
     one multiply, one half-up round per node per round — and every SUM
     in the algorithm is an integer sum, order-free under any
     partitioning.  The SQL oracle replays the identical arithmetic."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("dst")
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
+    e = G.directed_edges(edges, src, dst, "dst")
+    nodes = G.edge_nodes(e).localCheckpoint(eager=False)
     hub8 = nodes.select("node", F.lit(100_000_000).cast("long").alias("s8"))
     auth8 = None
 
@@ -223,7 +199,7 @@ def hits(edges: DataFrame, iters: int = 2,
 def opic(edges: DataFrame, iters: int = 3,
          src: str = "src", dst: str = "dst") -> DataFrame:
     """OPIC — Adaptive On-line Page Importance Computation (Abiteboul,
-    Preda & Cobéna, WWW 2003) over distinct (src, dst) edges →
+    Preda & Cobéna, WWW 2003) over (src, dst) edges →
     (node, history8, cash8, importance).  The third classic frontier-
     priority score beside PageRank and HITS, and the one actually
     DESIGNED for crawling: importance accrues ONLINE as pages are
@@ -241,11 +217,9 @@ def opic(edges: DataFrame, iters: int = 3,
     after k rounds = (history + cash) / Σ(history + cash) — the paper's
     X = (H + C)/(G + 1) with the same denominator for every node.
 
-    Scale shape mirrors ``pagerank``: the edge list is the loop
-    invariant — materialized once, hash-partitioned on src, lineage-
-    truncated — and each round is one src-keyed join + one dst-keyed
-    linear aggregation with map-side combine, plus one scalar (dangling
-    total) broadcast.  No window, no iteration-growing lineage.
+    Each round is one src-keyed join + one dst-keyed linear aggregation
+    with map-side combine, plus one scalar (dangling total) broadcast.
+    No window, no iteration-growing lineage.
 
     Determinism (HITS-grade, stronger than pagerank's float rounds):
     cash and history are exact LONGS throughout.  The per-edge share is
@@ -257,13 +231,8 @@ def opic(edges: DataFrame, iters: int = 3,
     retired from circulation (documented estimator bias ≤ outdeg·1
     units of 1e-8 per node per round — two orders below the 8-dp
     importance round)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
+    e = G.directed_edges(edges, src, dst, "src")
+    nodes = G.edge_nodes(e).localCheckpoint(eager=False)
     nn = (nodes.agg(F.count("*").cast("long").alias("n"))
           .localCheckpoint(eager=False))
     outdeg = (e.groupBy("src").agg(F.count("*").cast("long")
@@ -306,33 +275,31 @@ def opic(edges: DataFrame, iters: int = 3,
                             / F.col("tot"), 8).alias("importance")))
 
 
+def host_edges(entries: DataFrame) -> DataFrame:
+    """The host-level link graph of extracted pages: (src=host(url),
+    dst=host(link)) over the entries table's links arrays, with NULL
+    hosts and self-loops dropped."""
+    return (entries
+            .select(host_col("url").alias("src"),
+                    F.explode("links").alias("link"))
+            .select("src", host_col("link").alias("dst"))
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
+                    & (F.col("src") != F.col("dst"))))
+
+
 def host_opic(entries: DataFrame, iters: int = 3) -> DataFrame:
-    """Host-level OPIC from extracted pages — same host-edge derivation
-    as ``host_pagerank``; returns (node=host, rank=importance) so it
-    plugs into ``with_host_rank_priority`` unchanged (the opt-in
-    frontier priority contract)."""
-    edges = (entries
-             .select(host_col("url").alias("src"),
-                     F.explode("links").alias("link"))
-             .select("src", host_col("link").alias("dst"))
-             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                     & (F.col("src") != F.col("dst"))))
-    return (opic(edges, iters=iters)
+    """Host-level OPIC over ``host_edges``; returns (node=host,
+    rank=importance) so it plugs into ``with_host_rank_priority``
+    unchanged (the opt-in frontier priority contract)."""
+    return (opic(host_edges(entries), iters=iters)
             .select("node", F.col("importance").alias("rank")))
 
 
 def host_pagerank(entries: DataFrame, iters: int = 3,
                   damping: float = 0.85) -> DataFrame:
-    """Host-level PageRank from extracted pages: edges = (host(url) →
-    host(link)) over the entries table's links arrays, self-loops
-    dropped.  Returns (node=host, rank)."""
-    edges = (entries
-             .select(host_col("url").alias("src"),
-                     F.explode("links").alias("link"))
-             .select("src", host_col("link").alias("dst"))
-             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                     & (F.col("src") != F.col("dst"))))
-    return pagerank(edges, iters=iters, damping=damping)
+    """Host-level PageRank over ``host_edges``.  Returns (node=host,
+    rank)."""
+    return pagerank(host_edges(entries), iters=iters, damping=damping)
 
 
 def host_harmonic(entries: DataFrame, rounds: int = 3) -> DataFrame:
@@ -341,21 +308,13 @@ def host_harmonic(entries: DataFrame, rounds: int = 3) -> DataFrame:
     seed-list ranking (``sketches.hyperball`` symmetrizes the edge
     list, so distances are over the undirected host graph; Common
     Crawl's published ranking uses directed distances — ADVICE r4),
-    from the crawl's own link graph: edges = (host(url) → host(link)) over
-    the entries table, self-loops dropped; scores from
-    ``sketches.hyperball`` (bounded O(hosts·1024) register state, one
-    keyed join + keyed MAX agg per round).  Returns (node=host, rank)
-    — the ``with_host_rank_priority`` contract, so harmonic-ranked
-    frontier prioritization is a drop-in swap for the PageRank/OPIC
-    policies."""
+    over ``host_edges``; scores from ``sketches.hyperball`` (bounded
+    O(hosts·1024) register state, one keyed join + keyed MAX agg per
+    round).  Returns (node=host, rank) — the
+    ``with_host_rank_priority`` contract, so harmonic-ranked frontier
+    prioritization is a drop-in swap for the PageRank/OPIC policies."""
     from ..functions.sketches import hyperball
-    edges = (entries
-             .select(host_col("url").alias("src"),
-                     F.explode("links").alias("link"))
-             .select("src", host_col("link").alias("dst"))
-             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                     & (F.col("src") != F.col("dst"))))
-    return (hyperball(None, edges, rounds=rounds)
+    return (hyperball(None, host_edges(entries), rounds=rounds)
             .select("node", F.col("harmonic_est").alias("rank")))
 
 
@@ -414,15 +373,11 @@ def salsa(edges: DataFrame, iters: int = 2,
     order-free under any partitioning, bit-identical cross-engine
     (floor remainders dissipate, documented — unlike OPIC's virtual
     page there is no respray, matching the walk's per-step
-    normalization).  Per half-round one keyed join + one keyed agg
-    over the pinned edge list.
+    normalization).  Per half-round one keyed join + one keyed agg.
 
     Returns (node, auth8, hub8) — zeros for pure-hub / pure-authority
     nodes."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
+    e = G.directed_edges(edges, src, dst, "src")
     outd = (e.groupBy("src").agg(F.count("*").alias("od"))
             .localCheckpoint(eager=False))
     ind = (e.groupBy("dst").agg(F.count("*").alias("id"))
@@ -438,9 +393,7 @@ def salsa(edges: DataFrame, iters: int = 2,
                .groupBy("src")
                .agg(F.sum(F.expr("a8 div id")).cast("long").alias("h8"))
                .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node"))).distinct())
-    return (nodes
+    return (G.edge_nodes(e)
             .join(auth.withColumnRenamed("dst", "node"), "node", "left")
             .join(hub.withColumnRenamed("src", "node"), "node", "left")
             .select("node",

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph as G
 from . import text as X
 
 H_SPACE = float(1 << 60)  # h60 values are uniform in [0, 2^60)
@@ -225,17 +226,9 @@ def _hyperball_round_ests(nodes, edges, rounds, node_col="node",
     per-node estimate frames e0..eR]) — consumed by ``hyperball``
     (per-node harmonic centrality) and ``anf_effective_diameter``
     (round totals / neighborhood function)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("dst")
-         .localCheckpoint(eager=False))
-    base = (nodes if nodes is not None else
-            e.select(F.col("src").alias(node_col))
-            .union(e.select(F.col("dst").alias(node_col)))
-            ).select(node_col).distinct().localCheckpoint(eager=False)
+    e = G.undirected_edges(edges, src, dst, "dst")
+    base = (nodes.select(node_col).distinct() if nodes is not None
+            else G.edge_nodes(e, node_col)).localCheckpoint(eager=False)
     regs = _hll_self_registers(base, node_col).localCheckpoint(eager=False)
     ests = [_hll_estimate_by_key(regs, node_col)
             .withColumnRenamed("est", "e0")]

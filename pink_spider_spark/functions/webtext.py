@@ -45,6 +45,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph as G
 from . import text as X
 from .fanout import fan_out
 
@@ -167,20 +168,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     frame is pinned with ``localCheckpoint(eager=True)`` so the iterative
     lineage is truncated (same recompute-hazard discipline as
     crawl/scheduler.wave_order).  Converges in ≤ diameter rounds and
-    stops early via a limit-1 changed-row probe.
-
-    The symmetrized edge set is the loop invariant: it is materialized
-    ONCE, hash-partitioned on ``src`` (the per-round join key), and
-    lineage-truncated — unpinned, every round re-executed the entire
-    upstream edge derivation (for dedup_clusters that is the full
-    MinHash-LSH candidate pipeline) and re-shuffled it for the join;
-    the same Pregel-style pin as crawl/rank.pagerank's edge list."""
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .distinct()
-           .repartition("src")
-           .localCheckpoint(eager=False))
+    stops early via a limit-1 changed-row probe."""
+    sym = G.undirected_edges(edges, "src", "dst", "src")
     labels = (nodes.select("node", F.col("node").alias("label"))
               .localCheckpoint(eager=True))
     for _ in range(max_iter):
@@ -891,10 +880,8 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
                 .where(F.col("src") != F.col("dst"))
                 .distinct())
 
-    e = (edges.select("src", "dst")
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .localCheckpoint(eager=True))
+    e = (G.directed_edges(edges, "src", "dst", None)
+         .where(F.col("src") != F.col("dst")))
     rounds = 0
     converged = False
     for _ in range(max_iter):
@@ -1271,17 +1258,9 @@ def label_propagation(nodes: DataFrame, edges: DataFrame, rounds: int = 3,
     count agg + ONE node-keyed argmin agg — all linear with map-side
     combine; the argmin is ``min(struct(-count, label))`` so the
     count-then-min-label tie-break is a single integer-lexicographic
-    aggregate, never a window.  Symmetrized edge list materialized once,
-    src-partitioned + lineage-truncated; labels re-pinned per round
-    (both the Pregel loop-invariant pins used by pagerank/opic).  Rounds
+    aggregate, never a window.  Labels are re-pinned per round.  Rounds
     are a fixed constant — O(rounds) linear passes."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
+    e = G.undirected_edges(edges, src, dst, "src")
     keep_cols = [node_col] + (["color"] if colors is not None else [])
     base = nodes.select(*keep_cols).distinct().localCheckpoint(eager=False)
     labels = base.select(*keep_cols, F.col(node_col).alias("lbl"))
@@ -1338,12 +1317,8 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     explode(3)-and-count attribution agg — no window, no cartesian.
     Returns (node, degree, triangles) for every node of the edge set.
     """
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"),
-                               F.col(src).alias("b")))
-           .where(F.col("a") != F.col("b"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    und = (G.undirected_edges(edges, src, dst, None)
+           .select(F.col("src").alias("a"), F.col("dst").alias("b")))
     deg = und.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
     # orient a -> b iff (deg_a, a) < (deg_b, b); computing it from the
     # symmetric list keeps each undirected edge exactly once
@@ -1650,16 +1625,8 @@ def bfs_hops(nodes: DataFrame, edges: DataFrame, source,
     d_k(v) = min(d_{k-1}(v), 1 + min_u d_{k-1}(u)) over in-neighbors,
     ``rounds`` fixed so the trajectory is reproducible; nodes beyond
     ``rounds`` hops stay NULL.  All integer.  Per round one src-keyed
-    join + one dst-keyed MIN agg (map-side combined); the symmetrized
-    edge list is pinned once (the pagerank/opic loop-invariant
-    contract)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
+    join + one dst-keyed MIN agg (map-side combined)."""
+    e = G.undirected_edges(edges, src, dst, "src")
     base = nodes.select(node_col).distinct().localCheckpoint(eager=False)
     dist = base.select(
         node_col,
@@ -1891,15 +1858,8 @@ def coreness(nodes: DataFrame, edges: DataFrame, rounds: int = 4,
     All integer, order-free.  Per round: one dst-keyed join + one
     src-keyed collect+fold agg (the h-index is an in-row count over
     the sorted neighbor-estimate array — estimates bounded by max
-    degree, arrays bounded by degree); symmetrized edges pinned once
-    src-partitioned (the Pregel loop-invariant contract)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
+    degree, arrays bounded by degree)."""
+    e = G.undirected_edges(edges, src, dst, "src")
     est = (e.groupBy("src").agg(F.count("*").alias("est"))
            .withColumnRenamed("src", node_col)
            .localCheckpoint(eager=False))
@@ -1953,18 +1913,10 @@ def harmonic_exact(nodes: DataFrame, edges: DataFrame, rounds: int = 3,
     Returns (node, reachable, harmonic_num) where harmonic_num is the
     L-scaled exact integer score (L = 6 for rounds=3)."""
     import math
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
-    base = (nodes if nodes is not None else
-            e.select(F.col("src").alias(node_col))
-            .union(e.select(F.col("dst").alias(node_col)))
-            ).select(F.col(node_col).alias("v")).distinct() \
-        .localCheckpoint(eager=False)
+    e = G.undirected_edges(edges, src, dst, "src")
+    base = (nodes.select(F.col(node_col).alias("v")).distinct()
+            if nodes is not None else G.edge_nodes(e, "v")
+            ).localCheckpoint(eager=False)
     ball = base.select("v", F.col("v").alias("u"))
     sizes = []
     for _ in range(rounds):
@@ -2236,13 +2188,7 @@ def adamic_adar(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Returns (u, v, cn, aa6, jaccard) for u < v non-adjacent pairs with
     ≥ ``min_common`` common (capped) neighbors."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .repartition("src")
-         .localCheckpoint(eager=False))
+    e = G.undirected_edges(edges, src, dst, "src")
     deg = e.groupBy("src").agg(F.count("*").alias("deg")) \
         .withColumnRenamed("src", "node").localCheckpoint(eager=False)
     mid = (deg.where((F.col("deg") >= 2)
@@ -2389,12 +2335,7 @@ def assortativity(edges: DataFrame, src: str = "src",
     where den = 0 and r is undefined).  DECIMAL(38,0) sums ≡ HUGEINT.
     One degree agg + one edge-keyed degree join — no window, no
     all-pairs.  Returns one row (m_edges, assortativity 6 dp)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .union(edges.select(F.col(dst).alias("src"),
-                             F.col(src).alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct()
-         .localCheckpoint(eager=False))
+    e = G.undirected_edges(edges, src, dst, None)
     deg = e.groupBy("src").agg(F.count("*").alias("deg")) \
         .withColumnRenamed("src", "node")
     ed = (e.where(F.col("src") < F.col("dst"))
@@ -2485,15 +2426,12 @@ def reciprocity(edges: DataFrame, src: str = "src",
     complete, 1 − ā = 0).
 
     Returns one row: (n_nodes, n_edges, n_recip, r, rho)."""
-    e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-         .where(F.col("s") != F.col("d"))
-         .distinct()
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("s").alias("v"))
-             .union(e.select("d")).distinct()
-             .agg(F.count("*").cast("long").alias("n_nodes")))
-    rec = e.join(e.select(F.col("d").alias("s"), F.col("s").alias("d")),
-                 ["s", "d"], "left_semi")
+    e = (G.directed_edges(edges, src, dst, None)
+         .where(F.col("src") != F.col("dst")))
+    nodes = G.edge_nodes(e).agg(F.count("*").cast("long").alias("n_nodes"))
+    rec = e.join(e.select(F.col("dst").alias("src"),
+                          F.col("src").alias("dst")),
+                 ["src", "dst"], "left_semi")
     tot = e.agg(F.count("*").cast("long").alias("n_edges"))
     nr = rec.agg(F.count("*").cast("long").alias("n_recip"))
     out = nodes.crossJoin(tot).crossJoin(nr)

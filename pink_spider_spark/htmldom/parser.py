@@ -575,9 +575,18 @@ class _TreeBuilder(HTMLParser):
         self._start(tag, _dedupe_attrs(attrs), self_closing=True)
         # stdlib skips cdata mode for self-closing syntax; spec ignores
         # the slash on HTML rawtext elements, so re-enter it
-        if (tag in self.CDATA_CONTENT_ELEMENTS and self.stack
-                and self.current().tag == tag and self.current().ns is None):
+        if tag in self.CDATA_CONTENT_ELEMENTS:
             self.set_cdata_mode(tag)
+
+    def set_cdata_mode(self, elem):
+        # the tokenizer leaves the data state only when tree construction
+        # has just inserted the HTML rawtext/RCDATA element of that name:
+        # an svg/math <title>, <style> or <script> holds markup, and an
+        # ignored start tag leaves its content to be tokenized as usual
+        # (the stdlib switches on the tag name alone)
+        if (self.stack and self.stack[-1].tag == elem
+                and self.stack[-1].ns is None):
+            super().set_cdata_mode(elem)
 
     _SCRIPT_DELIMS = " \t\n\r\f/>"
 
@@ -653,12 +662,9 @@ class _TreeBuilder(HTMLParser):
         if not data:
             return
         if self.cdata_elem is not None:
-            # rawtext/RCDATA content (spec "text" insertion mode): straight
-            # into the element, no reconstruction, no mode dispatch.  Only
-            # insert when the start tag was actually inserted (TEXT_MODE);
-            # an ignored rawtext start tag drops its content.
-            if self.mode != TEXT_MODE:
-                return
+            # rawtext/RCDATA content (spec "text" insertion mode, entered
+            # with the element; see set_cdata_mode): straight into the
+            # element, no reconstruction, no mode dispatch
             if self.cdata_elem in RCDATA_ELEMENTS:
                 data = unescape(data)
             if self.skip_newline:

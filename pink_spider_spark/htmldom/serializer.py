@@ -8,8 +8,9 @@ options (reference: src/scraper.rs:116).  Behaviours reproduced:
 - attribute values escape ``&`` -> ``&amp;``, U+00A0 -> ``&nbsp;``,
   ``"`` -> ``&quot;``
 - text escapes ``&`` -> ``&amp;``, U+00A0 -> ``&nbsp;``, ``<`` -> ``&lt;``,
-  ``>`` -> ``&gt;``; raw-text elements (style/script/xmp/iframe/noembed/
-  noframes/plaintext) emit text children unescaped
+  ``>`` -> ``&gt;``; HTML raw-text elements (style/script/xmp/iframe/
+  noembed/noframes/plaintext/noscript) emit text children unescaped, an
+  svg/math ``style`` or ``script`` escapes them
 - void elements have no end tag
 """
 
@@ -56,7 +57,7 @@ def _serialize_into(node: Node, out: list, raw: bool) -> None:
         out.append(">")
         if node.tag in VOID_ELEMENTS:
             return
-        child_raw = node.tag in RAW_TEXT_ELEMENTS
+        child_raw = node.tag in RAW_TEXT_ELEMENTS and node.ns is None
         for child in node.children:
             _serialize_into(child, out, child_raw)
         out.append(f"</{node.tag}>")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .crawl import freshness as FR
 from .crawl import rank as K
 from .functions import clustering as C
+from .functions import graph as G
 from .functions.fanout import fan_out
 from .functions import search as SE
 from .functions import similarity as S
@@ -47,6 +48,7 @@ HEADLINE: list = []
 VERIFIER_ONLY: dict = {
     "emb_near_dup_pairs": "emb_near_dup_pairs_lsh_banded",
     "docs_ngram_jaccard_pairs": "docs_ngram_jaccard_pairs_prefix",
+    "graph_harmonic_exact": "graph_hyperball",
 }
 
 
@@ -1649,12 +1651,63 @@ def docs_textrank_keywords(spark, sf_dir):
                                iters=3, k=3)
 
 
-@q("graph_triangles", """
-WITH ids AS (SELECT i FROM generate_series(0, 2999) s(i)),
-raw AS (SELECT i AS a, (i + 1) % 3000 AS b FROM ids
-        UNION ALL SELECT i, (i + 2) % 3000 FROM ids
-        UNION ALL SELECT i, (i * 7) % 3000 FROM ids WHERE i % 3 = 0
-        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),
+# =====================================================================
+# Graph fixtures: each graph_* query runs over one of two edge sets,
+# built here once for the Spark side and once as oracle CTE text
+# =====================================================================
+#: the purchase graph as the oracle's ``ed`` CTE (distinct edges)
+_PURCHASE_ED_SQL = """
+WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
+                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
+            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),"""
+
+
+def _purchase_edges(spark, sf_dir):
+    """The customer→supplier purchase graph, one (src='c<custkey>',
+    dst='s<suppkey>') row per lineitem: ``_PURCHASE_ED_SQL``'s edges
+    before its DISTINCT (the graph operators collapse duplicates)."""
+    orders = _t(spark, sf_dir, "orders")
+    lineitem = _t(spark, sf_dir, "lineitem")
+    return (orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+            .select(F.concat(F.lit("c"),
+                             F.col("o_custkey").cast("string")).alias("src"),
+                    F.concat(F.lit("s"),
+                             F.col("l_suppkey").cast("string")).alias("dst")))
+
+
+def _ring_edges(spark, n: int):
+    """The deterministic n-node fixture graph as (src, dst) longs: a
+    ring, +2 chords (one triangle per node), i→7i%n chords on every
+    third node, and a hub at node 0 linked to every fifth node."""
+    ids = spark.range(0, n).select(F.col("id").cast("long"))
+    return (ids.select(F.col("id").alias("src"),
+                       ((F.col("id") + 1) % n).alias("dst"))
+            .union(ids.select(F.col("id"), (F.col("id") + 2) % n))
+            .union(ids.where(F.col("id") % 3 == 0)
+                   .select(F.col("id"), (F.col("id") * 7) % n))
+            .union(ids.where((F.col("id") % 5 == 0) & (F.col("id") != 0))
+                   .select(F.lit(0).cast("long"), F.col("id"))))
+
+
+def _ring_sql(n: int) -> str:
+    """``_ring_edges(spark, n)`` as the oracle's ``raw(a, b)`` CTE."""
+    return f"""
+WITH ids AS (SELECT i FROM generate_series(0, {n - 1}) s(i)),
+raw AS (SELECT i AS a, (i + 1) % {n} AS b FROM ids
+        UNION ALL SELECT i, (i + 2) % {n} FROM ids
+        UNION ALL SELECT i, (i * 7) % {n} FROM ids WHERE i % 3 = 0
+        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),"""
+
+
+#: the undirected ring fixture (both orientations, no self-loops) as the
+#: oracle's ``sym(src, dst)`` CTE over ``_ring_sql``'s ``raw``
+_RING_SYM_SQL = """
+sym AS (SELECT DISTINCT a AS src, b AS dst FROM
+          (SELECT a, b FROM raw UNION ALL SELECT b, a FROM raw)
+        WHERE a <> b)"""
+
+
+@q("graph_triangles", _ring_sql(3000) + """
 und AS (SELECT DISTINCT a, b FROM
           (SELECT a, b FROM raw UNION ALL SELECT b, a FROM raw)
         WHERE a <> b),
@@ -1687,16 +1740,7 @@ def graph_triangles(spark, sf_dir):
     emissions.  All integer; two keyed self-joins + one explode-count
     agg, no window, no cartesian (functions/webtext.py
     triangle_counts)."""
-    n = 3000
-    ids = spark.range(0, n).select(F.col("id").cast("long"))
-    edges = (ids.select(F.col("id").alias("src"),
-                        ((F.col("id") + 1) % n).alias("dst"))
-             .union(ids.select(F.col("id"), (F.col("id") + 2) % n))
-             .union(ids.where(F.col("id") % 3 == 0)
-                    .select(F.col("id"), (F.col("id") * 7) % n))
-             .union(ids.where((F.col("id") % 5 == 0) & (F.col("id") != 0))
-                    .select(F.lit(0).cast("long"), F.col("id"))))
-    return W.triangle_counts(edges)
+    return W.triangle_counts(_ring_edges(spark, 3000))
 
 
 def _lpa_half_step_sql(step: int, color: int) -> str:
@@ -1717,10 +1761,7 @@ l{step} AS (SELECT l.node, coalesce(p.lbl, l.lbl) AS lbl
        FROM l{step - 1} l LEFT JOIN p{step} p USING (node))"""
 
 
-_LPA_SQL = ("""
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+_LPA_SQL = (_PURCHASE_ED_SQL + """
 sym AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
 lpa_nodes AS (SELECT node,
                      CASE WHEN node LIKE 'c%' THEN 0 ELSE 1 END AS color
@@ -1748,16 +1789,8 @@ def graph_lpa(spark, sf_dir):
     (one integer-lexicographic min(struct(-count,label)) agg, never a
     window).  Oracle = the identical 4 half-steps unrolled as CTEs with
     ROW_NUMBER argmax (functions/webtext.py label_propagation)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(li, orders.o_orderkey == li.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst"))
-             .distinct())
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct()
+    edges = _purchase_edges(spark, sf_dir)
+    nodes = (G.edge_nodes(edges)
              .withColumn("color",
                          F.when(F.col("node").startswith("c"), F.lit(0))
                          .otherwise(F.lit(1))))
@@ -1813,15 +1846,7 @@ d{k} AS (SELECT d.node,
         FROM d{k - 1} d LEFT JOIN r{k} r ON d.node = r.dst)"""
 
 
-_BFS_SQL = ("""
-WITH ids AS (SELECT i FROM generate_series(0, 2999) s(i)),
-raw AS (SELECT i AS a, (i + 1) % 3000 AS b FROM ids
-        UNION ALL SELECT i, (i + 2) % 3000 FROM ids
-        UNION ALL SELECT i, (i * 7) % 3000 FROM ids WHERE i % 3 = 0
-        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),
-sym AS (SELECT DISTINCT a AS src, b AS dst FROM
-          (SELECT a, b FROM raw UNION ALL SELECT b, a FROM raw)
-        WHERE a <> b),
+_BFS_SQL = (_ring_sql(3000) + _RING_SYM_SQL + """,
 bn AS (SELECT DISTINCT src AS node FROM sym),
 d0 AS (SELECT node, CASE WHEN node = 0 THEN CAST(0 AS BIGINT) END AS d
        FROM bn)"""
@@ -1845,15 +1870,7 @@ e{r} AS (SELECT e.node, CASE WHEN h.h < e.est THEN h.h ELSE e.est END
          FROM e{r - 1} e JOIN h{r} h USING (node))"""
 
 
-_KCORE_SQL = ("""
-WITH ids AS (SELECT i FROM generate_series(0, 2999) s(i)),
-raw AS (SELECT i AS a, (i + 1) % 3000 AS b FROM ids
-        UNION ALL SELECT i, (i + 2) % 3000 FROM ids
-        UNION ALL SELECT i, (i * 7) % 3000 FROM ids WHERE i % 3 = 0
-        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),
-sym AS (SELECT DISTINCT a AS src, b AS dst FROM
-          (SELECT a, b FROM raw UNION ALL SELECT b, a FROM raw)
-        WHERE a <> b),
+_KCORE_SQL = (_ring_sql(3000) + _RING_SYM_SQL + """,
 e0 AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS est
        FROM sym GROUP BY src)"""
               + "".join(_kcore_round_sql(r + 1) for r in range(4))
@@ -1872,40 +1889,11 @@ def graph_kcore(spark, sf_dir):
     separating link-farm cores from sparse periphery with no global
     peeling order.  4 fixed rounds over the 3000-node fixture graph;
     all integer (functions/webtext.py coreness)."""
-    n = 3000
-    ids = spark.range(0, n).select(F.col("id").cast("long"))
-    edges = (ids.select(F.col("id").alias("src"),
-                        ((F.col("id") + 1) % n).alias("dst"))
-             .union(ids.select(F.col("id"), (F.col("id") + 2) % n))
-             .union(ids.where(F.col("id") % 3 == 0)
-                    .select(F.col("id"), (F.col("id") * 7) % n))
-             .union(ids.where((F.col("id") % 5 == 0) & (F.col("id") != 0))
-                    .select(F.lit(0).cast("long"), F.col("id"))))
-    return W.coreness(None, edges, rounds=4)
+    return W.coreness(None, _ring_edges(spark, 3000), rounds=4)
 
 
-_HB_FIXTURE_SQL = """
-WITH ids AS (SELECT i FROM generate_series(0, 999) s(i)),
-raw AS (SELECT i AS a, (i + 1) % 1000 AS b FROM ids
-        UNION ALL SELECT i, (i + 2) % 1000 FROM ids
-        UNION ALL SELECT i, (i * 7) % 1000 FROM ids WHERE i % 3 = 0
-        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),
-sym AS (SELECT DISTINCT a AS src, b AS dst FROM
-          (SELECT a, b FROM raw UNION ALL SELECT b, a FROM raw)
-        WHERE a <> b),
-bn AS (SELECT DISTINCT src AS v FROM sym)"""
-
-
-def _hb_fixture_edges(spark):
-    n = 1000
-    ids = spark.range(0, n).select(F.col("id").cast("long"))
-    return (ids.select(F.col("id").alias("src"),
-                       ((F.col("id") + 1) % n).alias("dst"))
-            .union(ids.select(F.col("id"), (F.col("id") + 2) % n))
-            .union(ids.where(F.col("id") % 3 == 0)
-                   .select(F.col("id"), (F.col("id") * 7) % n))
-            .union(ids.where((F.col("id") % 5 == 0) & (F.col("id") != 0))
-                   .select(F.lit(0).cast("long"), F.col("id"))))
+_HB_FIXTURE_SQL = (_ring_sql(1000) + _RING_SYM_SQL + """,
+bn AS (SELECT DISTINCT src AS v FROM sym)""")
 
 
 _HARMONIC_SQL = (_HB_FIXTURE_SQL + """,
@@ -1933,7 +1921,7 @@ def graph_harmonic_exact(spark, sf_dir):
     exactly as Σ ΔB_t·(6/t).  SCALE MARKER: O(n·|B|) pair
     materialization — the verifier for graph_hyperball's bounded
     register state (functions/webtext.py harmonic_exact)."""
-    return W.harmonic_exact(None, _hb_fixture_edges(spark), rounds=3)
+    return W.harmonic_exact(None, _ring_edges(spark, 1000), rounds=3)
 
 
 def _hb_est_sql(k: int) -> str:
@@ -1987,7 +1975,7 @@ def graph_hyperball(spark, sf_dir):
     bounded O(n·m) register state, one dst-keyed join + one
     (node,reg)-keyed MAX agg per round, registers bit-identical
     cross-engine (functions/sketches.py hyperball)."""
-    return SK.hyperball(None, _hb_fixture_edges(spark), rounds=3)
+    return SK.hyperball(None, _ring_edges(spark, 1000), rounds=3)
 
 
 _ASSORT_SQL = (_HB_FIXTURE_SQL + """,
@@ -2012,12 +2000,7 @@ FROM a
 """)
 
 
-@q("graph_reciprocity", """
-WITH ids AS (SELECT i FROM generate_series(0, 999) s(i)),
-raw AS (SELECT i AS a, (i + 1) % 1000 AS b FROM ids
-        UNION ALL SELECT i, (i + 2) % 1000 FROM ids
-        UNION ALL SELECT i, (i * 7) % 1000 FROM ids WHERE i % 3 = 0
-        UNION ALL SELECT 0, i FROM ids WHERE i % 5 = 0 AND i <> 0),
+@q("graph_reciprocity", _ring_sql(1000) + """
 e AS (SELECT DISTINCT a AS s, b AS d FROM raw WHERE a <> b),
 n AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM
         (SELECT s AS v FROM e UNION SELECT d FROM e)),
@@ -2043,7 +2026,7 @@ def graph_reciprocity(spark, sf_dir):
     null model — the nepotistic-backlink monitor beside TrustRank.
     One distinct + reverse-edge semi-join + three count aggs; exact
     longs, 6-dp final divisions (functions/webtext.py reciprocity)."""
-    return W.reciprocity(_hb_fixture_edges(spark))
+    return W.reciprocity(_ring_edges(spark, 1000))
 
 
 @q("docs_flesch_reading", """
@@ -2092,7 +2075,7 @@ def graph_assortativity(spark, sf_dir):
     graphs, positive for social graphs; Newman's eq. 4 cleared of
     fractions so every aggregate is an exact integer sum, one final
     division (functions/webtext.py assortativity)."""
-    return W.assortativity(_hb_fixture_edges(spark))
+    return W.assortativity(_ring_edges(spark, 1000))
 
 
 _AA_SQL = (_HB_FIXTURE_SQL + """,
@@ -2127,7 +2110,7 @@ def graph_adamic_adar(spark, sf_dir):
     standard super-hub guard bounding the Σdeg² two-hop join);
     weights micro-integerized so scores are order-free integer sums
     (functions/webtext.py adamic_adar)."""
-    return W.adamic_adar(_hb_fixture_edges(spark), max_middle_deg=64)
+    return W.adamic_adar(_ring_edges(spark, 1000), max_middle_deg=64)
 
 
 _ANF_SQL = (_HB_FIXTURE_SQL + """,
@@ -2179,7 +2162,7 @@ def graph_eff_diameter(spark, sf_dir):
     figure of Broder et al.'s web-graph papers.  Round totals are
     exact sums of micro-integerized per-node estimates
     (functions/sketches.py anf_effective_diameter)."""
-    return SK.anf_effective_diameter(None, _hb_fixture_edges(spark),
+    return SK.anf_effective_diameter(None, _ring_edges(spark, 1000),
                                      rounds=3)
 
 
@@ -2192,18 +2175,8 @@ def graph_bfs_hops(spark, sf_dir):
     rounds (the Pregel SSSP kernel, Malewicz et al. SIGMOD 2010) —
     unreached nodes NULL.  All integer; per round one keyed join + one
     MIN agg (functions/webtext.py bfs_hops)."""
-    n = 3000
-    ids = spark.range(0, n).select(F.col("id").cast("long"))
-    edges = (ids.select(F.col("id").alias("src"),
-                        ((F.col("id") + 1) % n).alias("dst"))
-             .union(ids.select(F.col("id"), (F.col("id") + 2) % n))
-             .union(ids.where(F.col("id") % 3 == 0)
-                    .select(F.col("id"), (F.col("id") * 7) % n))
-             .union(ids.where((F.col("id") % 5 == 0) & (F.col("id") != 0))
-                    .select(F.lit(0).cast("long"), F.col("id"))))
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct())
-    return W.bfs_hops(nodes, edges, source=0, rounds=4)
+    edges = _ring_edges(spark, 3000)
+    return W.bfs_hops(G.edge_nodes(edges), edges, source=0, rounds=4)
 
 
 @q("docs_cdc_dedup", """
@@ -3166,10 +3139,7 @@ def emb_ann_ivf_of_vec0(spark, sf_dir):
                      exclude_id=0)
 
 
-@q("graph_pagerank", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_pagerank", _PURCHASE_ED_SQL + """
 nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
 nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
 od AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM ed GROUP BY src),
@@ -3199,21 +3169,10 @@ def graph_pagerank(spark, sf_dir):
     over the customer→supplier purchase graph — the frontier-priority
     algorithm (crawl/rank.py pagerank / host_pagerank), oracle-checked
     on a deterministic edge set derived from the testdata star schema."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst")))
-    return K.pagerank(edges, iters=3, damping=0.85)
+    return K.pagerank(_purchase_edges(spark, sf_dir), iters=3, damping=0.85)
 
 
-@q("graph_trustrank", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_trustrank", _PURCHASE_ED_SQL + """
 nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
 sd AS (SELECT node FROM nodes WHERE node LIKE 'c%'
        AND CAST(substr(node, 2) AS BIGINT) % 10 = 0),
@@ -3253,17 +3212,8 @@ def graph_trustrank(spark, sf_dir):
     none — the spam-demotion score a production frontier pairs with
     PageRank.  Same purchase graph, 3 rounds, d=0.85, 8-dp-pinned
     trajectory (crawl/rank.py trustrank)."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst")))
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct())
-    seeds = nodes.where(F.col("node").startswith("c")
+    edges = _purchase_edges(spark, sf_dir)
+    seeds = G.edge_nodes(edges).where(F.col("node").startswith("c")
                         & (F.substring("node", 2, 18).cast("long")
                            % 10 == 0))
     return (K.trustrank(edges, seeds, iters=3, damping=0.85)
@@ -3576,10 +3526,7 @@ def events_markov_transitions(spark, sf_dir):
     return R.markov_transitions(_t(spark, sf_dir, "events"))
 
 
-@q("graph_rank_tau", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_rank_tau", _PURCHASE_ED_SQL + """
 nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
 nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
 od AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM ed GROUP BY src),
@@ -3636,16 +3583,9 @@ def graph_rank_tau(spark, sf_dir):
     8-dp ranks, tie-pair corrections per policy, one 4-dp float.
     Pair join quadratic in the policy table's node count only
     (crawl/rank.py rank_agreement_tau)."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"), F.col("o_custkey")
-                              .cast("string")).alias("src"),
-                     F.concat(F.lit("s"), F.col("l_suppkey")
-                              .cast("string")).alias("dst")))
+    edges = _purchase_edges(spark, sf_dir)
     pa = K.pagerank(edges).where(F.col("node").startswith("s"))
-    ind = (edges.select("src", "dst").distinct()
+    ind = (G.directed_edges(edges, "src", "dst", None)
            .where(F.col("dst").startswith("s"))
            .groupBy(F.col("dst").alias("node"))
            .agg(F.count("*").cast("double").alias("rank")))
@@ -3933,10 +3873,7 @@ def frontier_surt_keys(spark, sf_dir):
                     surt_domain_key(F.col("url")).alias("domain_key")))
 
 
-@q("graph_salsa", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_salsa", _PURCHASE_ED_SQL + """
 od AS (SELECT src, CAST(count(*) AS BIGINT) AS od FROM ed GROUP BY src),
 ind AS (SELECT dst, CAST(count(*) AS BIGINT) AS id FROM ed GROUP BY dst),
 h0 AS (SELECT src, CAST(100000000 AS BIGINT) AS h8 FROM od),
@@ -3966,15 +3903,7 @@ def graph_salsa(spark, sf_dir):
     eigenvector does.  1e8-scaled integer weights with floor-div
     shares (the OPIC/HITS exactness contract), 2 rounds over the same
     purchase graph as graph_hits (crawl/rank.py salsa)."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst")))
-    return K.salsa(edges, iters=2)
+    return K.salsa(_purchase_edges(spark, sf_dir), iters=2)
 
 
 @q("events_asof_last_signup", """
@@ -4987,10 +4916,7 @@ def docs_bm25_topk(spark, sf_dir):
     return SE.bm25_topk(docs, ["spark", "stream", "merge", "window"])
 
 
-@q("graph_hits", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_hits", _PURCHASE_ED_SQL + """
 nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
 h0 AS (SELECT node, 100000000::BIGINT AS s8 FROM nodes),
 a1r AS (SELECT e.dst AS node, sum(h.s8) AS r
@@ -5035,15 +4961,7 @@ def graph_hits(spark, sf_dir):
     Scores carried as exact 1e8-scaled longs; every sum in the
     algorithm is an integer sum, so the trajectory is bit-identical
     cross-engine (a stronger pin than pagerank's 8-dp float rounds)."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst")))
-    return K.hits(edges, iters=2)
+    return K.hits(_purchase_edges(spark, sf_dir), iters=2)
 
 
 @q("events_recrawl_priority", """
@@ -5089,10 +5007,7 @@ def events_recrawl_priority(spark, sf_dir):
                       F.round("staleness", 4).alias("staleness"))
 
 
-@q("graph_opic", """
-WITH ed AS (SELECT DISTINCT 'c' || CAST(o.o_custkey AS VARCHAR) AS src,
-                            's' || CAST(l.l_suppkey AS VARCHAR) AS dst
-            FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+@q("graph_opic", _PURCHASE_ED_SQL + """
 nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
 nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
 od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
@@ -5151,15 +5066,7 @@ def graph_opic(spark, sf_dir):
     floor-division shares, Spark `div` ≡ DuckDB `//`), so the whole
     trajectory is bit-identical cross-engine; only the final importance
     ratio is a float (one divide, 8-dp round)."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    edges = (orders.join(lineitem,
-                         orders.o_orderkey == lineitem.l_orderkey)
-             .select(F.concat(F.lit("c"),
-                              F.col("o_custkey").cast("string")).alias("src"),
-                     F.concat(F.lit("s"),
-                              F.col("l_suppkey").cast("string")).alias("dst")))
-    return K.opic(edges, iters=3)
+    return K.opic(_purchase_edges(spark, sf_dir), iters=3)
 
 
 # =====================================================================

@@ -1,67 +1,58 @@
-"""Regenerate CORRECTNESS_LOCAL_r05.json: every queries() entry vs its
-DuckDB oracle at sf0.01 AND sf0.1, per-query rows + hash-match + secs.
-Round 5: hash-match requires BOTH canonicalization paths — the fetchall
-canon (row-value truth) AND the driver-faithful pandas canon (dtype +
-hashable-schema sensitive; see verify_oracle.py docstring) — so a query
-only counts green if the driver's own gate would also pass it."""
-import json, os, subprocess, sys, time
+"""Bank local correctness: every queries() entry vs its DuckDB oracle at
+sf0.01 AND sf0.1, per-query rows + hash-match + secs.  A query counts
+green only when ``verify_oracle.compare_query`` finds no mismatch: both
+canonicalization paths must match — the fetchall canon (row-value
+truth) AND the driver-faithful pandas canon (dtype + hashable-schema
+sensitive; see the verify_oracle.py docstring) — so it is green only if
+the driver's own gate would also pass it.
 
-sys.path.insert(0, "/root/repo")
-import duckdb
+Usage: python scripts/gen_correctness_local.py OUT_JSON
+"""
+import datetime, json, os, subprocess, sys, time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pink_spider_spark import queries as Q
 from pink_spider_spark.session import get_spark
 
-sys.path.insert(0, "/root/repo/scripts")
-from verify_oracle import TABLES, pandas_canon_hash, value_hash
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
+from verify_oracle import compare_query, open_oracle
+
+if len(sys.argv) != 2:
+    sys.exit(__doc__)
+out_path = sys.argv[1]
 
 spark = get_spark(app_name="gen-correctness")
 out = {}
 counts = {}
 for sf, sf_dir in (("0.01", "/root/testdata/sf0.01"),
                    ("0.1", "/root/testdata/sf0.1")):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = open_oracle(sf_dir)
     n_ok = 0
-    for name, fn in Q.QUERY_BUILDERS.items():
+    for name in Q.QUERY_BUILDERS:
         t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        srows = sdf.collect()
-        cur = con.execute(Q.ORACLES[name])
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-        ok = (len(srows) == len(orows)
-              and sorted(sdf.columns) == sorted(ocols)
-              and value_hash([tuple(r) for r in srows], sdf.columns)
-              == value_hash(orows, ocols))
-        if ok:
-            import pandas as pd
-            try:
-                spdf = pd.DataFrame.from_records(
-                    [tuple(r) for r in srows], columns=sdf.columns)
-                opdf = con.execute(Q.ORACLES[name]).fetch_df()
-                ok = pandas_canon_hash(spdf) == pandas_canon_hash(opdf)
-            except TypeError:
-                ok = False
+        rows, problems = compare_query(spark, con, name, sf_dir)
+        ok = problems == []
         n_ok += ok
         out.setdefault(name, {})[sf] = {
-            "hash_match": bool(ok), "rows": len(srows),
+            "hash_match": ok, "rows": rows,
             "secs": round(time.time() - t0, 1)}
-        print(f"{sf} {name}: {'ok' if ok else 'FAIL'}", flush=True)
+        print(f"{sf} {name}: {'ok' if ok else 'FAIL'}"
+              + (f" {'; '.join(problems)}" if problems else ""), flush=True)
     counts[sf] = n_ok
     con.close()
 
 rev = subprocess.check_output(["git", "rev-parse", "--short", "HEAD"],
-                              cwd="/root/repo").decode().strip()
+                              cwd=ROOT).decode().strip()
 doc = {"engine_rev": rev,
-       "generated": "2026-08-21 round 5 local verify_oracle.py (dual canon)",
+       "generated": datetime.datetime.now(datetime.timezone.utc)
+       .strftime("%Y-%m-%d %H:%M UTC")
+       + " local verify_oracle.compare_query (dual canon)",
        "hash_match_sf0.01": counts["0.01"],
        "hash_match_sf0.1": counts["0.1"],
        "queries": dict(sorted(out.items())),
        "queries_total": len(Q.QUERY_BUILDERS)}
-with open("/root/repo/CORRECTNESS_LOCAL_r05.json", "w") as f:
+with open(out_path, "w") as f:
     json.dump(doc, f, indent=1, sort_keys=False)
 print("TOTALS", counts, "of", len(Q.QUERY_BUILDERS))
 spark.stop()

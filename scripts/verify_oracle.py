@@ -111,6 +111,67 @@ def pandas_canon_hash(pdf):
     return h.hexdigest()[:16]
 
 
+def open_oracle(sf_dir):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def compare_query(spark, con, name, sf_dir):
+    """Run query ``name`` on Spark and its oracle on ``con``; return
+    (rows, problems): the Spark row count (None when Spark failed) and
+    the list of mismatches under both canons, empty on a match, or None
+    when the query has no oracle (rows-only)."""
+    from pink_spider_spark import queries as Q
+
+    try:
+        sdf = Q.QUERY_BUILDERS[name](spark, sf_dir)
+        srows = sdf.collect()
+        scols = sdf.columns
+    except Exception as e:
+        return None, [f"spark error: {e}"]
+    oracle = Q.ORACLES.get(name)
+    if oracle is None:
+        return len(srows), None
+    try:
+        cur = con.execute(oracle)
+        ocols = [d[0] for d in cur.description]
+        orows = cur.fetchall()
+    except Exception as e:
+        return len(srows), [f"duckdb error: {str(e)[:200]}"]
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(ocols)}")
+        return len(srows), problems
+    sh = value_hash([tuple(r) for r in srows], scols)
+    oh = value_hash(orows, ocols)
+    if sh != oh:
+        problems.append(f"value hash spark={sh} duck={oh}")
+    # driver-path pandas canon twin (see module docstring)
+    import pandas as pd
+    try:
+        spdf = pd.DataFrame.from_records(
+            [tuple(r) for r in srows], columns=scols)
+        opdf = con.execute(oracle).fetch_df()
+        sph = pandas_canon_hash(spdf)
+        oph = pandas_canon_hash(opdf)
+        if sph != oph:
+            sdt = {c: str(spdf[c].dtype) for c in spdf.columns}
+            odt = {c: str(opdf[c].dtype) for c in opdf.columns}
+            problems.append(
+                f"pandas-canon hash spark={sph} duck={oph} "
+                f"(dtypes spark={sdt} duck={odt})")
+    except TypeError as e:
+        problems.append(f"pandas-canon unhashable schema: {e}")
+    return len(srows), problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -122,70 +183,22 @@ def main():
         sys.exit(f"unknown queries: {sorted(only - set(Q.QUERY_BUILDERS))}")
     names = [n for n in Q.QUERY_BUILDERS if not only or n in only]
     spark = get_spark(app_name="verify-oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    con = open_oracle(sf_dir)
 
     failures = []
     for name in names:
-        fn = Q.QUERY_BUILDERS[name]
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        oracle = Q.ORACLES.get(name)
-        if oracle is None:
-            print(f"ok   {name}: rows={len(srows)} (rows-only, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            if len(srows) == 0:
+        rows, problems = compare_query(spark, con, name, sf_dir)
+        secs = f"[{time.time()-t0:.1f}s]"
+        if problems is None:
+            print(f"ok   {name}: rows={rows} (rows-only, no oracle) {secs}")
+            if rows == 0:
                 print(f"WARN {name}: zero rows")
-            continue
-        try:
-            cur = con.execute(oracle)
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {str(e)[:200]}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(ocols)}")
-        else:
-            sh = value_hash([tuple(r) for r in srows], scols)
-            oh = value_hash(orows, ocols)
-            if sh != oh:
-                problems.append(f"value hash spark={sh} duck={oh}")
-            # driver-path pandas canon twin (see module docstring)
-            import pandas as pd
-            try:
-                spdf = pd.DataFrame.from_records(
-                    [tuple(r) for r in srows], columns=scols)
-                opdf = con.execute(oracle).fetch_df()
-                sph = pandas_canon_hash(spdf)
-                oph = pandas_canon_hash(opdf)
-                if sph != oph:
-                    sdt = {c: str(spdf[c].dtype) for c in spdf.columns}
-                    odt = {c: str(opdf[c].dtype) for c in opdf.columns}
-                    problems.append(
-                        f"pandas-canon hash spark={sph} duck={oph} "
-                        f"(dtypes spark={sdt} duck={odt})")
-            except TypeError as e:
-                problems.append(f"pandas-canon unhashable schema: {e}")
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
+        elif problems:
+            print(f"FAIL {name}: {'; '.join(problems)} {secs}")
             failures.append(name)
         else:
-            print(f"ok   {name}: rows={len(srows)} hash match [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: rows={rows} hash match {secs}")
 
     print(f"\n{len(names) - len(failures)}/{len(names)} pass")
     spark.stop()

@@ -10,7 +10,11 @@ tokenizing that alters any output byte on this corpus changes the digest;
 the pinned value was computed before the in-body fast path and the regex
 scanner landed in ``htmldom/parser.py``, then re-pinned once when the
 ``<pre>``/``<listing>`` LF skip began to end at the next tag or comment
-(random doc 484 keeps a newline after a ``<br>`` inside ``<pre>``).
+(random doc 484 keeps a newline after a ``<br>`` inside ``<pre>``), and
+once more when the tokenizer began to enter rawtext/RCDATA only for an
+inserted HTML element of that name (52 random docs: 36 with a
+``<title>``/``<style>``/``<script>``/``<textarea>``/``<noscript>``/
+``<iframe>`` inside svg or math, 16 with one ignored in a ``<select>``).
 """
 
 import hashlib
@@ -21,7 +25,7 @@ from pink_spider_spark.htmldom import parse_html, serialize
 from pink_spider_spark.sources import synth
 from tests.test_extract_fuzz import SNIPPETS, TAGS
 
-PINNED = "2ad9a40efd1560c9689b8d3faecca512a0fadb726a747a5012147b6cd5f0ede0"
+PINNED = "fe8a4b62fda1d01293e359cde72333ea0aec2f841cfd5cb7ead169603fa1c3e6"
 
 # text characters: markup delimiters, every whitespace the tokenizer
 # distinguishes (\v and U+00A0/U+2003 are \s for the stdlib regexes but

@@ -141,6 +141,19 @@ GOLDENS = [
     ("<svg><p>x</p>y", f"{B}<svg></svg><p>x</p>y{E}"),
     ("<svg><section><p>x",
      f"{B}<svg><section></section></svg><p>x</p>{E}"),
+    # RCDATA/rawtext is an HTML-namespace tokenizer switch: inside svg
+    # and math, title/style/textarea content is tokenized as markup.
+    # svg title is an HTML integration point, so <b> is an HTML element
+    ("<svg><title>a<b>b</b></title></svg>",
+     f"{B}<svg><title>a<b>b</b></title></svg>{E}"),
+    # math style is not: <mi> is a math child, and its text serializes
+    # escaped (raw text serialization is for HTML elements only)
+    ("<math><style>a &amp; b<mi>c</mi></style></math>",
+     f"{B}<math><style>a &amp; b<mi>c</mi></style></math>{E}"),
+    # svg textarea: markup inside, and no newline skip (an HTML
+    # <textarea> rule)
+    ("<svg><textarea>\n<g>x</g></textarea></svg>",
+     f"{B}<svg><textarea>\n<g>x</g></textarea></svg>{E}"),
     # in select: a block start tag is ignored, its text kept
     ("<select><option>a<p>b</select>c",
      f"{B}<select><option>ab</option></select>c{E}"),

@@ -10,7 +10,8 @@ ordering so a future registration can't silently push an unchecked
 operator out of the gate.
 """
 
-from pink_spider_spark.queries import ORACLES, QUERY_BUILDERS, _GATE_FIRST
+from pink_spider_spark.queries import (ORACLES, QUERY_BUILDERS,
+                                       VERIFIER_ONLY, _GATE_FIRST)
 
 NEVER_DRIVER_CHECKED_R4 = (
     "docs_winnow_fingerprints", "docs_nb_langid", "graph_trustrank",
@@ -70,3 +71,9 @@ def test_no_duplicate_names():
     assert len(_GATE_FIRST) == len(set(_GATE_FIRST))
     # the surface only ever grows (round-4 close: 123 queries)
     assert len(QUERY_BUILDERS) >= 125
+
+
+def test_verifier_only_names_registered_queries():
+    # each small-scale verifier and the scale twin it names are queries
+    names = set(VERIFIER_ONLY) | set(VERIFIER_ONLY.values())
+    assert names <= set(QUERY_BUILDERS), names - set(QUERY_BUILDERS)
