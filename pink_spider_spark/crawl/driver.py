@@ -425,7 +425,7 @@ class CrawlDriver:
         links_found = int(wave_totals["links_found"] or 0)
         miss_n = batch_n - fetched_n
         tick("entries_write")
-        extracted = self.spark.read.parquet(entries_dir)
+        extracted = self.spark.read.schema(schemas.ENTRY_SCHEMA).parquet(entries_dir)
         if n_recrawl:
             # force path (reference: src/main.rs:162-192 force=true →
             # entry.playlistify + save): the refreshed extraction REPLACES

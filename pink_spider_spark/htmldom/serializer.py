@@ -11,7 +11,8 @@ options (reference: src/scraper.rs:116).  Behaviours reproduced:
   ``>`` -> ``&gt;``; HTML raw-text elements (style/script/xmp/iframe/
   noembed/noframes/plaintext/noscript) emit text children unescaped, an
   svg/math ``style`` or ``script`` escapes them
-- void elements have no end tag
+- HTML void elements have no end tag; an svg/math element with a void
+  HTML name (``<link>``, ``<source>``) keeps its children and end tag
 """
 
 from __future__ import annotations
@@ -55,7 +56,7 @@ def _serialize_into(node: Node, out: list, raw: bool) -> None:
             out.append(_escape_attr(value))
             out.append('"')
         out.append(">")
-        if node.tag in VOID_ELEMENTS:
+        if node.tag in VOID_ELEMENTS and node.ns is None:
             return
         child_raw = node.tag in RAW_TEXT_ELEMENTS and node.ns is None
         for child in node.children:

@@ -4,7 +4,16 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """24g, capped at half the host's physical RAM: a heap cap above what
+    the host has lets a long local session grow its heap instead of
+    collecting until the kernel kills the JVM."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
 
 
 def get_spark(app_name: str = "pink-spider-spark",
@@ -60,7 +69,8 @@ def get_spark(app_name: str = "pink-spider-spark",
                                "16m" if master.startswith("local") else "128m"))
         .config("spark.sql.files.openCostInBytes",
                 os.environ.get("SPARK_GRAFT_OPEN_COST", "1m"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         # zstd over the snappy default: the crawl's dominant stage writes
         # multi-GB entry deltas (html-derived content/text); disk
         # bandwidth is the one resource that does NOT grow with executor
@@ -72,6 +82,17 @@ def get_spark(app_name: str = "pink-spider-spark",
                 os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
         .config("spark.ui.enabled", "false")
     )
+    if (master.startswith("local") and SparkContext._gateway is None
+            and "PYSPARK_GATEWAY_PORT" not in os.environ):
+        # the engine's worker daemon (worker_daemon.py): every Python UDF
+        # task re-read pyspark.zip and the spark-core jar in
+        # importlib.invalidate_caches(), about 100 ms of CPU per task on
+        # CPython 3.11 (later versions defer that re-read).  Only where
+        # this call launches a local JVM, which inherits the PYTHONPATH
+        # set above: a spark-submit JVM or a cluster executor starts its
+        # daemon from a PYTHONPATH that need not hold this package.
+        builder = builder.config("spark.python.daemon.module",
+                                 "pink_spider_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

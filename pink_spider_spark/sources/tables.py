@@ -74,26 +74,20 @@ class SnapshotTable:
             if schema is None:
                 raise ValueError(f"table {self.name} is empty and no schema given")
             return spark.createDataFrame([], schema)
-        # mergeSchema across dirs: multi-table transaction appends
-        # (append_many_partitioned) write superset-column files, so one
-        # snapshot can mix per-table and superset dirs; without merging,
-        # spark picks an arbitrary sample file's schema (footer-only
-        # metadata cost, and only paid on multi-dir snapshots)
+        if schema is not None:
+            # a declared schema reads with no footer-inference job: fields
+            # missing from a dir (added since it was written) read as NULL,
+            # and the superset columns a multi-table append wrote
+            # (append_many_partitioned) are not read
+            return spark.read.schema(schema).parquet(*dirs)
+        # mergeSchema across dirs: one snapshot can mix per-table and
+        # superset dirs; without merging, spark picks an arbitrary sample
+        # file's schema (footer-only metadata cost, and only paid on
+        # multi-dir snapshots)
         reader = spark.read
         if len(dirs) > 1:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*dirs)
-        if schema is not None:
-            # project to exactly the requested fields: drops sibling-table
-            # superset columns, and fills fields added since a dir was
-            # written with NULL (additive schema evolution)
-            from pyspark.sql import functions as F
-            have = set(df.columns)
-            df = df.select(*[
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields])
-        return df
+        return reader.parquet(*dirs)
 
     #: Parquet codec for all table writes.  zstd compresses the text-heavy
     #: crawl tables (html/content/text columns) ~2x tighter than snappy for

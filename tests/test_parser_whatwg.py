@@ -186,6 +186,11 @@ GOLDENS = [
     # an unterminated comment at EOF is a comment
     ("<div>t</div><!--<p>u",
      f"{B}<div>t</div><!--<p>u-->{E}"),
+    # void is an HTML-namespace property: svg link/source are ordinary
+    # foreign elements with children and end tags ("/>" on a foreign
+    # element closes it, as an empty element)
+    ("<svg><link>x</link><source/></svg>",
+     f"{B}<svg><link>x</link><source></source></svg>{E}"),
 ]
 
 
